@@ -24,44 +24,22 @@ object ScalingBench {
   private val hexWkt =
     "POLYGON ((800.3 500.7, 650.3 760.7, 350.3 760.7, 200.3 500.7, 350.3 240.7, 650.3 240.7, 800.3 500.7))"
 
-  def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // simple (one-line) plan descriptions for listener events: the
-      // default formatted mode re-renders the full plan on every AQE
-      // stage update — driver-side time that scales with plan size
-      .config("spark.sql.ui.explainMode", "simple")
-      // NOTE deliberately NOT raising objectHashAggregate's sort fallback
-      // here: doc synthesis (collect_list per doc) relies on the early
-      // sort-based fallback to bound memory at high replication; the
-      // raised threshold is for per-point top-k aggregation paths only
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Every ScalingBench session keeps objectHashAggregate's default sort
+    * fallback, for the replicated doc synthesis (see GraftSession.create). */
+  private def withSession[T](cores: Int)(f: SparkSession => T): T =
+    GraftSession.withSession(cores, raisedAggFallback = false)(f)
 
   /** Materialize the replicated doc table once (untimed setup): the
     * north-star input IS a stored table of interleaved documents, so
     * the timed job reads it like any Iceberg-style table. Written with
     * enough files that any parallelism level scans in parallel (the
     * testdata parquet itself has one row group — unsplittable). */
-  def setupDocs(sfDir: String, replicas: Int, path: String): Long = {
-    val spark = session(16)
-    try {
+  def setupDocs(sfDir: String, replicas: Int, path: String): Long =
+    withSession(16) { spark =>
       val docs = DocSynth.docTableReplicated(spark, sfDir, replicas)
       docs.repartition(64).write.mode("overwrite").parquet(path)
       spark.read.parquet(path).count()
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
-  }
 
   /** One pass of the headline job over the stored doc table: scan ->
     * explode point spans -> decode -> PIP join -> tile assign ->
@@ -91,9 +69,8 @@ object ScalingBench {
   private val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt
 
   private def timeJob(cores: Int, nRows: Long, iters: Int)
-                     (job: (SparkSession, Int) => Long): (Double, Long) = {
-    val spark = session(cores)
-    try {
+                     (job: (SparkSession, Int) => Long): (Double, Long) =
+    withSession(cores) { spark =>
       job(spark, -1) // JIT/codegen warmup (untimed)
       val secs = (0 until repeats).map { _ =>
         val t0 = System.nanoTime()
@@ -101,19 +78,13 @@ object ScalingBench {
         (System.nanoTime() - t0) / 1e9
       }.min
       (secs, nRows * iters)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
-  }
 
   /** Second scaling pair — the LLM-pipeline side: MinHash+LSH dedup
     * over a replicated documents table (shingle -> signature -> band ->
     * min-rep; the engine's codegen'd MinHashBands path). */
-  def setupTexts(sfDir: String, replicas: Int, path: String): Long = {
-    val spark = session(16)
-    try {
+  def setupTexts(sfDir: String, replicas: Int, path: String): Long =
+    withSession(16) { spark =>
       import org.apache.spark.sql.functions._
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
         .crossJoin(spark.range(replicas).select(col("id").as("__rep")))
@@ -121,12 +92,7 @@ object ScalingBench {
           concat(col("text"), lit(" r"), col("__rep").cast("string")).as("text"))
       d.repartition(64).write.mode("overwrite").parquet(path)
       spark.read.parquet(path).count()
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
-  }
 
   def dedupJob(spark: SparkSession, textPath: String, iteration: Int): Long = {
     import org.apache.spark.sql.functions._
@@ -140,9 +106,8 @@ object ScalingBench {
     * clean-room codec). Embarrassingly parallel by construction; the
     * pair evidences that the CODEC path, not just the relational ops,
     * scales. */
-  def setupLaz(sfDir: String, replicas: Int, dir: String): Long = {
-    val spark = session(16)
-    try {
+  def setupLaz(sfDir: String, replicas: Int, dir: String): Long =
+    withSession(16) { spark =>
       val pts = graft.model.Model.explodePoints(
           DocSynth.docTableReplicated(spark, sfDir, replicas))
         .withColumn("shard", pmod(col("span_idx") + length(col("doc_id")), lit(64)))
@@ -150,12 +115,7 @@ object ScalingBench {
         graft.sources.LasWriter.XForms(0.001, 0.001, 0.001, 0, 0, 0),
         "shard", compress = true)
       pts.count()
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
-  }
 
   def lazJob(spark: SparkSession, dir: String, iteration: Int): Long =
     graft.sources.LasDecode.asDistributedDataFrame(spark, s"$dir/*.laz")

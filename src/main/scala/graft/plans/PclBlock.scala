@@ -55,13 +55,7 @@ object PclBlock {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](65536)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } finally in.close()
+      try in.readAllBytes() finally in.close()
     }
     run(df, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
   }

@@ -436,8 +436,8 @@ object LasDecode {
     * per point instead of ~20 (external Row + field boxing + the
     * RowEncoder conversion projection). At 8+ concurrent decode tasks
     * in one JVM the allocation-rate/cache pressure of the boxed path
-    * was the measured scaling bottleneck (LazScaleTry: GC <= 5% but
-    * per-core throughput halved 2 -> 8 cores). Field-for-field
+    * was the measured scaling bottleneck (GC <= 5% but per-core
+    * throughput halved 2 -> 8 cores; SCALE.md). Field-for-field
     * identical to decodeRecord; the distributed==driver equality specs
     * pin that. */
   def decodeRecordUnsafe(bb: ByteBuffer, base: Int, h: LasHeader,

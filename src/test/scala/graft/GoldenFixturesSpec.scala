@@ -9,18 +9,9 @@ import graft.model.Model
 
 /** Shared session for all suites (one JVM, reused). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "5000000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[8] whatever the host's core count, so test partitioning is
+  // the same everywhere
+  lazy val spark: SparkSession = GraftSession.create(cores = 8)
   val RefData = "/root/reference/test/data"
   val P1065 = s"$RefData/las/1.2-with-color.las"
 }

@@ -565,6 +565,7 @@ class OperatorBehaviorSpec extends AnyFunSuite {
         |       cell_id(1.5D, 2.5D, 10) AS cid,
         |       st_contains_xy('POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))', 5.0D, 5.0D) AS inside,
         |       st_contains_xy('POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))', 50.0D, 5.0D) AS outside,
+        |       hex_cell(12.5D, 7.0D, 3.0D) AS hex,
         |       simhash64(array('a', 'b')) AS sh,
         |       neighbor_cells(cell_id(500.0D, 500.0D, 4)) AS nbrs,
         |       dot_self(array(cast(3.0 as float), cast(4.0 as float))) AS d2,
@@ -575,6 +576,7 @@ class OperatorBehaviorSpec extends AnyFunSuite {
       graft.index.Morton.interleave(sp.ixAt(1.5), sp.iyAt(2.5)))
     assert(r.getAs[Long]("cid") === sp.cellAt(1.5, 2.5, 10))
     assert(r.getAs[Boolean]("inside") && !r.getAs[Boolean]("outside"))
+    assert(r.getAs[Long]("hex") === graft.operators.HexGrid.hexCell(12.5, 7.0, 3.0))
     assert(r.getAs[Long]("sh") === graft.operators.SimHash64.of(Seq("a", "b")))
     assert(r.getSeq[Long](r.fieldIndex("nbrs")).toSet ===
       sp.neighborhood(sp.cellAt(500.0, 500.0, 4)).toSet)

@@ -128,7 +128,9 @@ class PipelineXmlSpec extends AnyFunSuite {
 
   test("bad/ fixtures all fail loudly at translate or run, never silently") {
     val dir = new java.io.File("/root/reference/test/data/pipeline/bad")
-    val bads = dir.listFiles().filter(_.getName.endsWith(".xml")).sortBy(_.getName)
+    val listed = Option(dir.listFiles()).getOrElse(
+      fail(s"fixture directory ${dir.getPath} is missing or unreadable"))
+    val bads = listed.filter(_.getName.endsWith(".xml")).sortBy(_.getName)
     assert(bads.length === 10)
     bads.foreach { f =>
       val r = scala.util.Try {

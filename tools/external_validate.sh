@@ -16,7 +16,7 @@
 #   pdal                                  PDAL CLI (LAZ + PCD legs)
 #   pcl_convert_pcd_ascii_binary          PCL PCD converter
 #
-# Every leg ends in a graft-side field-by-field diff (LazTry / PcdTry,
+# Every leg ends in a graft-side field-by-field diff (ExternalValidate diff,
 # exit 1 on any divergent row), so "PASS" means value-identical points,
 # not just same byte count.
 set -euo pipefail
@@ -37,7 +37,7 @@ laz_leg() { # $1=input las, $2=leg name
   local in=$1 tag=$2
   echo "== LAZ leg [$tag]: $in"
   # our encode -> their decode -> our field diff
-  $SBT "runMain graft.tools.LazTry compress $in $WORK/$tag-ours.laz"
+  $SBT "runMain graft.ExternalValidate compress $in $WORK/$tag-ours.laz"
   if [ -n "$LASZIP" ]; then
     "$LASZIP" -i "$WORK/$tag-ours.laz" -o "$WORK/$tag-theirs.las"
   elif [ -n "$PDAL" ]; then
@@ -45,7 +45,7 @@ laz_leg() { # $1=input las, $2=leg name
   else
     echo "SKIP (no laszip/pdal on PATH)"; return 0
   fi
-  $SBT "runMain graft.tools.LazTry $in $WORK/$tag-theirs.las" \
+  $SBT "runMain graft.ExternalValidate diff $in $WORK/$tag-theirs.las" \
     && echo "PASS [$tag] our-encode -> external-decode"
   # their encode -> our decode -> our field diff
   if [ -n "$LASZIP" ]; then
@@ -53,7 +53,7 @@ laz_leg() { # $1=input las, $2=leg name
   else
     "$PDAL" translate "$in" "$WORK/$tag-theirs.laz"
   fi
-  $SBT "runMain graft.tools.LazTry $WORK/$tag-theirs.laz $in" \
+  $SBT "runMain graft.ExternalValidate diff $WORK/$tag-theirs.laz $in" \
     && echo "PASS [$tag] external-encode -> our-decode"
 }
 
@@ -77,21 +77,21 @@ else
   if [ -f "$WORK/seed.pcd" ]; then
     # our re-encode (all three DATA modes) -> their converter -> our diff
     for mode in ascii binary binary_compressed; do
-      $SBT "runMain graft.tools.PcdTry convert $WORK/seed.pcd $WORK/ours-$mode.pcd $mode"
+      $SBT "runMain graft.ExternalValidate pcd-convert $WORK/seed.pcd $WORK/ours-$mode.pcd $mode"
       if [ -n "$PCLCONV" ]; then
         # 0 = ascii, 1 = binary: convert THEIR way, then diff values
         "$PCLCONV" "$WORK/ours-$mode.pcd" "$WORK/theirs-$mode.pcd" 0
       else
         "$PDAL" translate "$WORK/ours-$mode.pcd" "$WORK/theirs-$mode.pcd"
       fi
-      $SBT "runMain graft.tools.PcdTry diff $WORK/seed.pcd $WORK/theirs-$mode.pcd" \
+      $SBT "runMain graft.ExternalValidate diff $WORK/seed.pcd $WORK/theirs-$mode.pcd" \
         && echo "PASS [pcd-$mode] our-encode -> external-decode"
     done
     # their binary_compressed -> our decode
     if [ -n "$PCLCONV" ]; then
       "$PCLCONV" "$WORK/seed.pcd" "$WORK/theirs-bc.pcd" 2 || \
         "$PCLCONV" "$WORK/seed.pcd" "$WORK/theirs-bc.pcd" 1
-      $SBT "runMain graft.tools.PcdTry diff $WORK/theirs-bc.pcd $WORK/seed.pcd" \
+      $SBT "runMain graft.ExternalValidate diff $WORK/theirs-bc.pcd $WORK/seed.pcd" \
         && echo "PASS [pcd] external-encode -> our-decode"
     fi
   fi
@@ -105,7 +105,7 @@ if [ -n "$GDALINFO" ] && [ -n "$PDAL" ]; then
  {"type":"writers.p2g","filename":"$WORK/xval","dx":50,"dy":50,
   "radius":36,"output_type":["mean"],"output_format":"tif"}]}
 EOF
-  $SBT "runMain graft.tools.PipelineRun $WORK/p2g.json" || true
+  $SBT "runMain graft.ExternalValidate pipeline $WORK/p2g.json" || true
   if [ -f "$WORK/xval.mean.tif" ]; then
     "$GDALINFO" "$WORK/xval.mean.tif" && echo "PASS [tif] gdalinfo parses our GeoTIFF"
   fi
