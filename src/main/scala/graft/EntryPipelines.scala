@@ -4,17 +4,17 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{DocSynth, Oracle}
+import graft.sources.Oracle
+import graft.sources.Oracle.mortonSql
 import graft.operators._
-import graft.index.CellSpace
+import graft.QuerySpec.pts
 
 /** Second query batch: grid-kNN family, raster aggregation, hex density,
-  * reprojection, chipper/PMF (rows-only), and the training-data pipeline
-  * suite (text analysis, dedup, ANN, multimodal). Merged into
-  * SparkEntry.queries/oracleSql. */
+  * reprojection, chipper/PMF, and the training-data pipeline suite (text
+  * analysis, dedup, ANN, multimodal). Joined to the spatial family in
+  * SparkEntry.roster. */
 object EntryPipelines {
 
-  private def pts(s: SparkSession, dir: String): DataFrame = DocSynth.points(s, dir)
   private def docs(s: SparkSession, dir: String): DataFrame = {
     // the sandbox documents parquet is one file (one scan partition):
     // fan out so per-row text analysis uses every core — but only when
@@ -59,79 +59,291 @@ object EntryPipelines {
   private def queryVecSql: String =
     queryVec.map(_.toString).mkString("[", ", ", "]::DOUBLE[]")
 
-  // ---------------------------------------------------------------------
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- grid-partitioned kNN family ---------------------------------
-    "q_knn_delta" -> ((s, dir) => {
-      val p = pts(s, dir)
-      val src = p.filter(col("intensity") % 89 === 0)
-      val cand = p.filter(col("intensity") % 97 === 0)
-      JoinOps.delta(src, cand, level = JoinOps.AutoLevel)
-        .select("doc_id", "span_idx", "dx", "dy", "dz")
-    }),
+  /** The points CTE the oracles open with (`WITH $P`). */
+  private val P = Oracle.pointsCte
+  private val wordsSql = TextOps.wordsSql
+  import TextOps.sqlList
 
-    "q_sor" -> ((s, dir) => {
-      val sub = pts(s, dir).filter(col("intensity") % 19 === 0)
-      JoinOps.statisticalOutlierRemoval(k = 4, multThresh = 1.0,
-        level = JoinOps.AutoLevel)(sub)
-        .select("doc_id", "span_idx")
-    }),
+  /** Deterministic 20-point moving cloud for the CPD E-step oracle —
+    * literal in both the Spark query and the SQL twin. */
+  private val cpdMoving: Array[Double] =
+    (0 until 20).flatMap(j => Seq(100.0 + 40.0 * j, 200.0 + 30.0 * (j % 5), 50.0 + 10.0 * j)).toArray
+  private val cpdSigma2: Double = 40000.0
+
+  /** The grid-kNN, raster, reprojection, ground, text, dedup, ANN,
+    * streaming, multimodal and CPD queries, each with its oracle twin. */
+  val roster: Seq[QuerySpec] = Seq(
+    // ---- grid-partitioned kNN family ---------------------------------
+    QuerySpec("q_knn_delta",
+      (s, dir) => {
+        val p = pts(s, dir)
+        val src = p.filter(col("intensity") % 89 === 0)
+        val cand = p.filter(col("intensity") % 97 === 0)
+        JoinOps.delta(src, cand, level = JoinOps.AutoLevel)
+          .select("doc_id", "span_idx", "dx", "dy", "dz")
+      },
+      // EXACT kNN oracle (no grid mirroring): a 256-unit x/y band join is
+      // a pure candidate PREFILTER — any neighbor within euclidean 256 of
+      // a point satisfies |dx|<=256 and |dy|<=256, so the per-point
+      // nearest-1 is exact whenever its distance is <= 256. The
+      // `cert`/`missing` CTEs verify that IN SQL and emit a loud poison
+      // row (breaking the hash compare) if the band were ever too narrow —
+      // the oracle can be fast without trusting the engine's grid.
+      //
+      // DETERMINISM (the r2 recipe, applied to selection rather than
+      // aggregation): the winner per point is the MINIMUM of the pair
+      // set under the total order (dist, cdoc, cspan) — a pure
+      // comparison, never a float SUM, so no partial-aggregation
+      // reassociation can flip it between partitionings; the engine's
+      // min_by over the identical (d2, id) struct ordering picks the
+      // same row bit-for-bit (ties included, because the id tail makes
+      // the order total). dx/dy/dz are then single subtractions of
+      // stored doubles on the winning row — identical in both systems.
+      // The shuffle.partitions 4-vs-32 invariance spec pins the engine
+      // side (OperatorBehaviorSpec "delta nearest-1 is bit-identical").
+      s"""WITH $P,
+         |src AS (SELECT * FROM pts WHERE intensity % 89 = 0),
+         |cand AS (SELECT * FROM pts WHERE intensity % 97 = 0),
+         |pairs AS (
+         |  SELECT s.doc_id, s.span_idx,
+         |         s.x - c.x AS dx, s.y - c.y AS dy, s.z - c.z AS dz,
+         |         sqrt((s.x - c.x) * (s.x - c.x) + (s.y - c.y) * (s.y - c.y)) AS dist,
+         |         c.doc_id AS cdoc, c.span_idx AS cspan
+         |  FROM src s JOIN cand c
+         |    ON c.x BETWEEN s.x - 256.0 AND s.x + 256.0
+         |   AND c.y BETWEEN s.y - 256.0 AND s.y + 256.0),
+         |n1 AS (
+         |  SELECT doc_id, span_idx, dx, dy, dz, dist FROM pairs
+         |  QUALIFY row_number() OVER (PARTITION BY doc_id, span_idx
+         |                             ORDER BY dist, cdoc, cspan) = 1),
+         |cert AS (SELECT count(*) AS bad FROM n1 WHERE dist > 256.0),
+         |missing AS (
+         |  SELECT count(*) AS miss FROM src s
+         |  WHERE NOT EXISTS (SELECT 1 FROM n1 n
+         |                    WHERE n.doc_id = s.doc_id AND n.span_idx = s.span_idx)
+         |    AND (SELECT count(*) FROM cand) > 0)
+         |SELECT doc_id, span_idx, dx, dy, dz FROM n1
+         |UNION ALL
+         |SELECT 'ORACLE_BAND_TOO_NARROW', -1, CAST(NULL AS DOUBLE),
+         |       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
+         |FROM cert, missing WHERE cert.bad > 0 OR missing.miss > 0""".stripMargin),
+
+    QuerySpec("q_sor",
+      (s, dir) => {
+        val sub = pts(s, dir).filter(col("intensity") % 19 === 0)
+        JoinOps.statisticalOutlierRemoval(k = 4, multThresh = 1.0,
+          level = JoinOps.AutoLevel)(sub)
+          .select("doc_id", "span_idx")
+      },
+      // EXACT SOR oracle: same band-prefilter + in-SQL certificate
+      // discipline (kth-nearest distance must stay within the band, and
+      // every point must appear) — mirrors nothing about the engine's
+      // grid levels. The per-point mean distance is the engine's exact
+      // arithmetic (ascending sequential sum / 4), and the global
+      // threshold is rebuilt from 1e-6-quantized integer moments with
+      // the engine's fixed scalar op sequence, so membership is
+      // bit-identical — no accumulation-order exposure anywhere.
+      s"""WITH $P,
+         |sub AS (SELECT * FROM pts WHERE intensity % 19 = 0),
+         |pairs AS (
+         |  SELECT a.doc_id, a.span_idx,
+         |         sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+         |              + (a.z - b.z) * (a.z - b.z)) AS dist,
+         |         b.doc_id AS bdoc, b.span_idx AS bspan
+         |  FROM sub a JOIN sub b
+         |    ON b.x BETWEEN a.x - 256.0 AND a.x + 256.0
+         |   AND b.y BETWEEN a.y - 256.0 AND a.y + 256.0
+         |   AND NOT (a.doc_id = b.doc_id AND a.span_idx = b.span_idx)),
+         |knn AS (
+         |  SELECT doc_id, span_idx, dist,
+         |         row_number() OVER (PARTITION BY doc_id, span_idx
+         |                            ORDER BY dist, bdoc, bspan) AS rn
+         |  FROM pairs),
+         |md AS (
+         |  SELECT doc_id, span_idx,
+         |         list_reduce(list(dist ORDER BY dist), (a, b) -> a + b) / 4 AS md,
+         |         max(dist) AS kd, count(*) AS nk
+         |  FROM knn WHERE rn <= 4 GROUP BY doc_id, span_idx),
+         |cert AS (SELECT count(*) AS bad FROM md WHERE nk < 4 OR kd > 256.0),
+         |missing AS (
+         |  SELECT count(*) AS miss FROM sub s
+         |  WHERE NOT EXISTS (SELECT 1 FROM md m
+         |                    WHERE m.doc_id = s.doc_id AND m.span_idx = s.span_idx)
+         |    AND (SELECT count(*) FROM sub) > 1),
+         |qmd AS (
+         |  SELECT doc_id, span_idx,
+         |         CAST(floor(md * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
+         |  FROM md),
+         |mom AS (
+         |  SELECT CAST(CAST(sum(q) AS HUGEINT) AS DOUBLE) AS s1,
+         |         CAST(sum(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) AS DOUBLE) AS s2,
+         |         count(*) AS n
+         |  FROM qmd),
+         |th AS (
+         |  SELECT s1 / n + CAST(1.0 AS DOUBLE) *
+         |         sqrt(greatest((s2 - s1 * s1 / n) / (n - 1), CAST(0 AS DOUBLE))) AS t
+         |  FROM mom)
+         |SELECT qmd.doc_id, qmd.span_idx FROM qmd, th WHERE qmd.q <= th.t
+         |UNION ALL
+         |SELECT 'ORACLE_BAND_TOO_NARROW', -1
+         |FROM cert, missing WHERE cert.bad > 0 OR missing.miss > 0""".stripMargin),
 
     // ---- raster aggregation / hex density ----------------------------
-    "q_p2g" -> ((s, dir) =>
-      AggOps.p2gRaster(32, 32, 22.6, 0, 0)(pts(s, dir))
-        .select(col("px"), col("py"), col("den"), col("zmin"), col("zmax"),
-          col("zmean"), round(col("zidw"), 5).as("zidw5"),
-          round(col("zstd"), 5).as("zstd5"))),
+    QuerySpec("q_p2g",
+      (s, dir) =>
+        AggOps.p2gRaster(32, 32, 22.6, 0, 0)(pts(s, dir))
+          .select(col("px"), col("py"), col("den"), col("zmin"), col("zmax"),
+            col("zmean"), round(col("zidw"), 5).as("zidw5"),
+            round(col("zstd"), 5).as("zstd5")),
+      s"""WITH $P,
+         |base AS (
+         |  SELECT x, y, z,
+         |         CAST(floor(x / 32) AS BIGINT) AS cx0,
+         |         CAST(floor(y / 32) AS BIGINT) AS cy0
+         |  FROM pts),
+         |expanded AS (
+         |  SELECT x, y, z, cx0 + ox.o AS px, cy0 + oy.o AS py
+         |  FROM base
+         |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
+         |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)),
+         |gated AS (
+         |  SELECT *,
+         |         sqrt((x - ((px + 0.5) * 32.0)) * (x - ((px + 0.5) * 32.0))
+         |            + (y - ((py + 0.5) * 32.0)) * (y - ((py + 0.5) * 32.0))) AS dist
+         |  FROM expanded)
+         |SELECT px, py, CAST(count(*) AS BIGINT) AS den,
+         |       min(z) AS zmin, max(z) AS zmax, sum(z) / count(*) AS zmean,
+         |       round(sum(z / greatest(dist, 1e-12)) / sum(1.0 / greatest(dist, 1e-12)), 5) AS zidw5,
+         |       round(stddev_pop(z), 5) AS zstd5
+         |FROM gated WHERE dist <= 22.6 GROUP BY px, py""".stripMargin),
 
     // the reference's default nodata window fill (fill_window_size=3):
     // empty in-grid cells take the 1/d^2-weighted mean of their
     // non-empty (2w+1)^2 neighbors; filled cells carry den=0
-    "q_p2g_fill" -> ((s, dir) =>
-      AggOps.p2gRaster(32, 32, 22.6, 0, 0, fillWindowSize = 3)(pts(s, dir))
-        .select(col("px"), col("py"), col("den"),
-          round(col("zmin"), 5).as("zmin5"), round(col("zmax"), 5).as("zmax5"),
-          round(col("zmean"), 5).as("zmean5"), round(col("zidw"), 5).as("zidw5"),
-          round(col("zstd"), 5).as("zstd5"))),
+    QuerySpec("q_p2g_fill",
+      (s, dir) =>
+        AggOps.p2gRaster(32, 32, 22.6, 0, 0, fillWindowSize = 3)(pts(s, dir))
+          .select(col("px"), col("py"), col("den"),
+            round(col("zmin"), 5).as("zmin5"), round(col("zmax"), 5).as("zmax5"),
+            round(col("zmean"), 5).as("zmean5"), round(col("zidw"), 5).as("zidw5"),
+            round(col("zstd"), 5).as("zstd5")),
+      s"""WITH $P,
+         |base AS (
+         |  SELECT x, y, z,
+         |         CAST(floor(x / 32) AS BIGINT) AS cx0,
+         |         CAST(floor(y / 32) AS BIGINT) AS cy0
+         |  FROM pts),
+         |expanded AS (
+         |  SELECT x, y, z, cx0 + ox.o AS px, cy0 + oy.o AS py
+         |  FROM base
+         |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
+         |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)),
+         |gated AS (
+         |  SELECT *,
+         |         sqrt((x - ((px + 0.5) * 32.0)) * (x - ((px + 0.5) * 32.0))
+         |            + (y - ((py + 0.5) * 32.0)) * (y - ((py + 0.5) * 32.0))) AS dist
+         |  FROM expanded),
+         |cells AS (
+         |  SELECT px, py, CAST(count(*) AS BIGINT) AS den,
+         |         min(z) AS zmin, max(z) AS zmax, sum(z) / count(*) AS zmean,
+         |         sum(z / greatest(dist, 1e-12)) / sum(1.0 / greatest(dist, 1e-12)) AS zidw,
+         |         stddev_pop(z) AS zstd
+         |  FROM gated WHERE dist <= 22.6 GROUP BY px, py),
+         |ext AS (
+         |  SELECT min(px) AS pxmin, max(px) AS pxmax,
+         |         min(py) AS pymin, max(py) AS pymax FROM cells),
+         |cand AS (
+         |  SELECT c.px + ox.o AS px, c.py + oy.o AS py,
+         |         CAST(greatest(abs(ox.o), abs(oy.o)) AS DOUBLE) AS fd,
+         |         c.zmin, c.zmax, c.zmean, c.zstd, c.zidw
+         |  FROM cells c
+         |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
+         |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)
+         |  WHERE NOT (ox.o = 0 AND oy.o = 0)),
+         |filled AS (
+         |  SELECT cand.px, cand.py, CAST(0 AS BIGINT) AS den,
+         |         sum(zmin / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmin,
+         |         sum(zmax / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmax,
+         |         sum(zmean / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmean,
+         |         sum(zidw / (fd * fd)) / sum(1.0 / (fd * fd)) AS zidw,
+         |         sum(zstd / (fd * fd)) / sum(1.0 / (fd * fd)) AS zstd
+         |  FROM cand, ext
+         |  WHERE cand.px BETWEEN ext.pxmin AND ext.pxmax
+         |    AND cand.py BETWEEN ext.pymin AND ext.pymax
+         |    AND NOT EXISTS (SELECT 1 FROM cells c2
+         |                    WHERE c2.px = cand.px AND c2.py = cand.py)
+         |  GROUP BY cand.px, cand.py)
+         |SELECT px, py, den,
+         |       round(zmin, 5) AS zmin5, round(zmax, 5) AS zmax5,
+         |       round(zmean, 5) AS zmean5, round(zidw, 5) AS zidw5,
+         |       round(zstd, 5) AS zstd5
+         |FROM (SELECT * FROM cells UNION ALL SELECT * FROM filled)""".stripMargin),
 
-    "q_hexbin" -> ((s, dir) =>
-      TileOps.hexDensity(50.0)(pts(s, dir))
-        .select("hex_q", "hex_r", "density")),
+    QuerySpec("q_hexbin",
+      (s, dir) =>
+        TileOps.hexDensity(50.0)(pts(s, dir))
+          .select("hex_q", "hex_r", "density"),
+      s"""WITH $P, $hexSql
+         |SELECT CAST(hq0 AS INT) AS hex_q, CAST(hr0 AS INT) AS hex_r,
+         |       CAST(count(*) AS BIGINT) AS density
+         |FROM hex GROUP BY 1, 2""".stripMargin),
 
-    "q_reproject" -> ((s, dir) => {
-      val meters = pts(s, dir).withColumns(Map(
-        "x" -> ((col("x") - 512) * 50000), "y" -> ((col("y") - 512) * 20000)))
-      Reproject.webMercatorToGeo(meters)
-        .select(col("doc_id"), col("span_idx"),
-          round(col("x"), 9).as("lon9"), round(col("y"), 9).as("lat9"))
-    }),
+    QuerySpec("q_reproject",
+      (s, dir) => {
+        val meters = pts(s, dir).withColumns(Map(
+          "x" -> ((col("x") - 512) * 50000), "y" -> ((col("y") - 512) * 20000)))
+        Reproject.webMercatorToGeo(meters)
+          .select(col("doc_id"), col("span_idx"),
+            round(col("x"), 9).as("lon9"), round(col("y"), 9).as("lat9"))
+      },
+      s"""WITH $P
+         |SELECT doc_id, span_idx,
+         |       round(((x - 512) * 50000) / 6378137.0 * (180.0 / pi()), 9) AS lon9,
+         |       round((2.0 * atan(exp(((y - 512) * 20000) / 6378137.0)) - pi() / 2.0)
+         |             * (180.0 / pi()), 9) AS lat9
+         |FROM pts""".stripMargin),
 
     // NTv2 NAD27->NAD83 datum grid shift (codegen'd GridShift expression
     // over the demo grid, constructed THROUGH the .gsb write->parse
     // codec). The oracle mirrors Ntv2.bilinear/demoLatShift/demoLonShift
     // term for term — any edit there must be mirrored in gridShiftSql.
-    "q_grid_shift" -> ((s, dir) => {
-      val g = graft.sources.Ntv2.demoGrid()
-      val geo = pts(s, dir).withColumns(Map(
-        "x" -> (lit(-125.0) + col("x") * lit(9.0 / 1024)),
-        "y" -> (lit(40.0) + col("y") * lit(8.0 / 1024))))
-      Reproject.gridShiftForward(g)(geo)
-        .select(col("doc_id"), col("span_idx"),
-          round(col("x"), 9).as("lon9"), round(col("y"), 9).as("lat9"))
-    }),
+    QuerySpec("q_grid_shift",
+      (s, dir) => {
+        val g = graft.sources.Ntv2.demoGrid()
+        val geo = pts(s, dir).withColumns(Map(
+          "x" -> (lit(-125.0) + col("x") * lit(9.0 / 1024)),
+          "y" -> (lit(40.0) + col("y") * lit(8.0 / 1024))))
+        Reproject.gridShiftForward(g)(geo)
+          .select(col("doc_id"), col("span_idx"),
+            round(col("x"), 9).as("lon9"), round(col("y"), 9).as("lat9"))
+      },
+      gridShiftSql),
 
-    // ---- rows-only coverage (no ANSI-SQL oracle) ---------------------
-    "q_chipper" -> ((s, dir) =>
-      // chip sizes follow the cumulate-and-round formula exactly, so the
-      // oracle recomputes them from count(*) alone (membership itself is
-      // covered by the golden P1065 fixture)
-      TileOps.chipper(4096)(pts(s, dir))
-        .groupBy(col("chip")).agg(count(lit(1)).as("n"))),
+    // ---- chipper / ground / PCL -------------------------------------
+    QuerySpec("q_chipper",
+      (s, dir) =>
+        // chip sizes follow the cumulate-and-round formula exactly, so the
+        // oracle recomputes them from count(*) alone (membership itself is
+        // covered by the golden P1065 fixture)
+        TileOps.chipper(4096)(pts(s, dir))
+          .groupBy(col("chip")).agg(count(lit(1)).as("n")),
+      s"""WITH $P,
+         |c AS (SELECT CAST(count(*) AS BIGINT) AS total FROM pts),
+         |m AS (SELECT total, CAST(ceil(total / 4096.0) AS BIGINT) AS nchips FROM c),
+         |idx AS (SELECT unnest(generate_series(0, nchips - 1)) AS chip, total, nchips FROM m)
+         |SELECT CAST(chip AS INT) AS chip,
+         |       CAST(round((CAST(chip AS DOUBLE) + 1) * total / nchips)
+         |            - round(CAST(chip AS DOUBLE) * total / nchips) AS BIGINT) AS n
+         |FROM idx""".stripMargin),
 
-    "q_pmf_ground" -> ((s, dir) =>
-      GroundOps.pmf(GroundOps.PmfParams(cellSize = 16, maxWindowSize = 9,
-        slope = 1.0, initialDistance = 2.0, maxDistance = 20.0))(pts(s, dir))
-        .groupBy(col("classification")).agg(count(lit(1)).as("n"))),
+    QuerySpec("q_pmf_ground",
+      (s, dir) =>
+        GroundOps.pmf(GroundOps.PmfParams(cellSize = 16, maxWindowSize = 9,
+          slope = 1.0, initialDistance = 2.0, maxDistance = 20.0))(pts(s, dir))
+          .groupBy(col("classification")).agg(count(lit(1)).as("n")),
+      s"""WITH $P, $pmfSql
+         |SELECT classification, CAST(count(*) AS BIGINT) AS n
+         |FROM classified GROUP BY classification""".stripMargin),
 
     // EXACT per-point PMF — the reference's DEFAULT filters.ground branch
     // (GroundFilter.cpp:72 approximate=false): per-point classification
@@ -142,199 +354,471 @@ object EntryPipelines {
     // the full-density cloud pays ~230M window pairs in round 1 at
     // sf0.1 for no extra signal — the reference-golden PclBlockGoldenSpec
     // exercises the operator on a full cloud.
-    "q_pmf_exact" -> ((s, dir) =>
-      GroundOps.pmfExact(GroundOps.PmfParams(cellSize = 4, maxWindowSize = 40,
-        slope = 1.0, initialDistance = 2.0, maxDistance = 20.0))(
-        pts(s, dir).filter(col("intensity") % 23 === 0))
-        .select(col("doc_id"), col("span_idx"),
-          col("classification").cast("int").as("cls"))),
+    QuerySpec("q_pmf_exact",
+      (s, dir) =>
+        GroundOps.pmfExact(GroundOps.PmfParams(cellSize = 4, maxWindowSize = 40,
+          slope = 1.0, initialDistance = 2.0, maxDistance = 20.0))(
+          pts(s, dir).filter(col("intensity") % 23 === 0))
+          .select(col("doc_id"), col("span_idx"),
+            col("classification").cast("int").as("cls")),
+      s"""WITH $P, $pmfExactSql
+         |SELECT doc_id, span_idx, cls FROM exact_classified""".stripMargin),
 
-    "q_ann_lsh" -> ((s, dir) =>
-      AnnOps.lshTopK(queryVec, k = 20, planes = 6)(embs(s, dir))
-        .select(col("vec_id"), col("label"), round(col("sim"), 6).as("sim6"))),
+    QuerySpec("q_ann_lsh",
+      (s, dir) =>
+        AnnOps.lshTopK(queryVec, k = 20, planes = 6)(embs(s, dir))
+          .select(col("vec_id"), col("label"), round(col("sim"), 6).as("sim6")),
+      annLshSql),
 
     // the filters.pclblock STAGE itself under the oracle: a PassThrough
     // -> VoxelGrid PCL sub-pipeline, including the reference's
     // min-bounds shift + float32 narrowing (exact here: shifted coords
     // are 0.5-multiples <= 1024, representable in float32, so centroid
     // sums are order-free integers-of-halves on both engines)
-    "q_pclblock" -> ((s, dir) =>
-      graft.plans.PclBlock.run(pts(s, dir),
-        """{"pipeline":{"filters":[
+    QuerySpec("q_pclblock",
+      (s, dir) =>
+        graft.plans.PclBlock.run(pts(s, dir),
+          """{"pipeline":{"filters":[
           {"name":"PassThrough","setFilterFieldName":"z",
            "setFilterLimits":{"min":100.0,"max":300.0}},
           {"name":"VoxelGrid","setLeafSize":{"x":64.0,"y":64.0,"z":16.0}}]}}""")
-        .select("x", "y", "z")),
+          .select("x", "y", "z"),
+      // KEEP IN SYNC with PclBlock.run: min-bounds shift, float32
+      // narrowing (CAST AS REAL), PassThrough offset-adjusted limits,
+      // VoxelGrid centroids on the shifted lattice, unshift
+      s"""WITH $P,
+         |m AS (SELECT min(x) AS mx, min(y) AS my, min(z) AS mz FROM pts),
+         |sh AS (
+         |  SELECT CAST(CAST(p.x - m.mx AS REAL) AS DOUBLE) AS xs,
+         |         CAST(CAST(p.y - m.my AS REAL) AS DOUBLE) AS ys,
+         |         CAST(CAST(p.z - m.mz AS REAL) AS DOUBLE) AS zs
+         |  FROM pts p CROSS JOIN m),
+         |pt AS (
+         |  SELECT sh.* FROM sh CROSS JOIN m
+         |  WHERE zs >= 100.0 - m.mz AND zs <= 300.0 - m.mz),
+         |vox AS (
+         |  SELECT CAST(floor(xs / 64.0) AS BIGINT) AS vx,
+         |         CAST(floor(ys / 64.0) AS BIGINT) AS vy,
+         |         CAST(floor(zs / 16.0) AS BIGINT) AS vz,
+         |         sum(xs) / count(*) AS cx, sum(ys) / count(*) AS cy,
+         |         sum(zs) / count(*) AS cz
+         |  FROM pt GROUP BY 1, 2, 3)
+         |SELECT cx + m.mx AS x, cy + m.my AS y, cz + m.mz AS z
+         |FROM vox CROSS JOIN m""".stripMargin),
 
     // ---- text analysis ------------------------------------------------
-    "q_token_count" -> ((s, dir) =>
-      TextOps.tokenCounts(docs(s, dir))),
+    QuerySpec("q_token_count",
+      (s, dir) =>
+        TextOps.tokenCounts(docs(s, dir)),
+      """SELECT doc_id,
+        |       CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_ws_tokens,
+        |       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_subword_units,
+        |       CAST(length(text) AS INT) AS len
+        |FROM documents""".stripMargin),
 
     // rank-ordered byte-pair-merge tokenizer (real BPE encode over the
     // fixture merge table, codegen'd expression)
-    "q_token_bpe" -> ((s, dir) =>
-      TextOps.bpeTokenCounts(docs(s, dir))),
+    QuerySpec("q_token_bpe",
+      (s, dir) =>
+        TextOps.bpeTokenCounts(docs(s, dir)),
+      s"""SELECT doc_id,
+         |       CAST(length(s) - length(replace(s, chr(31), '')) - 1 AS INT) AS n_bpe
+         |FROM (SELECT doc_id, ${TextOps.Bpe.oracleTokenString("text")} AS s
+         |      FROM documents)""".stripMargin),
 
-    "q_quality" -> ((s, dir) =>
-      TextOps.qualityScore(docs(s, dir))
-        .select(col("doc_id"), col("len"), col("n_words"), col("n_stop"),
-          round(col("alpha_ratio"), 6).as("alpha6"),
-          round(col("punct_ratio"), 6).as("punct6"),
-          round(col("stop_ratio"), 6).as("stop6"))),
+    QuerySpec("q_quality",
+      (s, dir) =>
+        TextOps.qualityScore(docs(s, dir))
+          .select(col("doc_id"), col("len"), col("n_words"), col("n_stop"),
+            round(col("alpha_ratio"), 6).as("alpha6"),
+            round(col("punct_ratio"), 6).as("punct6"),
+            round(col("stop_ratio"), 6).as("stop6")),
+      s"""WITH q AS (
+         |  SELECT doc_id,
+         |         CAST(length(text) AS INT) AS len,
+         |         CAST(len($wordsSql) AS INT) AS n_words,
+         |         CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.enStop)}, w))) AS INT) AS n_stop,
+         |         len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
+         |         len(regexp_extract_all(text, '[.,!?;:]')) AS n_punct
+         |  FROM documents)
+         |SELECT doc_id, len, n_words, n_stop,
+         |       round(CAST(n_alpha AS DOUBLE) / greatest(len, 1), 6) AS alpha6,
+         |       round(CAST(n_punct AS DOUBLE) / greatest(len, 1), 6) AS punct6,
+         |       round(CAST(n_stop AS DOUBLE) / greatest(n_words, 1), 6) AS stop6
+         |FROM q""".stripMargin),
 
-    "q_langid" -> ((s, dir) =>
-      TextOps.langId(docs(s, dir))
-        .select("doc_id", "en", "de", "fr", "es", "lang_pred")),
+    QuerySpec("q_langid",
+      (s, dir) =>
+        TextOps.langId(docs(s, dir))
+          .select("doc_id", "en", "de", "fr", "es", "lang_pred"),
+      s"""WITH s AS (
+         |  SELECT doc_id,
+         |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.enStop)}, w))) AS INT) AS en,
+         |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.deStop)}, w))) AS INT) AS de,
+         |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.frStop)}, w))) AS INT) AS fr,
+         |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.esStop)}, w))) AS INT) AS es
+         |  FROM documents)
+         |SELECT doc_id, en, de, fr, es,
+         |       CASE WHEN greatest(en, de, fr, es) = 0 THEN 'und'
+         |            WHEN de = greatest(en, de, fr, es) THEN 'de'
+         |            WHEN en = greatest(en, de, fr, es) THEN 'en'
+         |            WHEN es = greatest(en, de, fr, es) THEN 'es'
+         |            ELSE 'fr' END AS lang_pred
+         |FROM s""".stripMargin),
 
     // ---- deduplication ------------------------------------------------
-    "q_dedup_exact" -> ((s, dir) =>
-      TextOps.dedupExact(docs(s, dir))),
+    QuerySpec("q_dedup_exact",
+      (s, dir) =>
+        TextOps.dedupExact(docs(s, dir)),
+      """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
+        |       min(doc_id) AS rep_doc_id, CAST(count(*) AS BIGINT) AS n_dups
+        |FROM documents GROUP BY 1""".stripMargin),
 
-    "q_minhash_dedup" -> ((s, dir) =>
-      TextOps.minhashDedup(numPerms = 16, shingleN = 3, bands = 4)(docs(s, dir))),
+    QuerySpec("q_minhash_dedup",
+      (s, dir) =>
+        TextOps.minhashDedup(numPerms = 16, shingleN = 3, bands = 4)(docs(s, dir)),
+      minhashDedupSql),
 
-    "q_dedup_cc" -> ((s, dir) =>
-      TextOps.minhashDedupCC(numPerms = 16, shingleN = 3, bands = 4)(docs(s, dir))),
+    QuerySpec("q_dedup_cc",
+      (s, dir) =>
+        TextOps.minhashDedupCC(numPerms = 16, shingleN = 3, bands = 4)(docs(s, dir)),
+      dedupCcSql),
 
     // substring-level exact dedup (duplicated 6-word spans corpus-wide)
-    "q_substring_dup" -> ((s, dir) =>
-      TextOps.substringDup(n = 6)(docs(s, dir))),
+    QuerySpec("q_substring_dup",
+      (s, dir) =>
+        TextOps.substringDup(n = 6)(docs(s, dir)),
+      // mirrors TextOps.substringDup(n=6): md5 over the same 6-word
+      // shingle strings, dup = corpus-wide count > 1, zeros kept
+      s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents),
+         |g AS (SELECT doc_id,
+         |        UNNEST(list_transform(range(1, len(ws) - 6 + 2),
+         |          i -> md5(array_to_string(list_slice(ws, i, i + 5), ' ')))) AS g
+         |      FROM w),
+         |dup AS (SELECT g FROM g GROUP BY g HAVING count(*) > 1),
+         |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_positions,
+         |               CAST(count(DISTINCT g) AS BIGINT) AS n_dup_ngrams
+         |        FROM g JOIN dup USING (g) GROUP BY 1)
+         |SELECT d.doc_id,
+         |       coalesce(per.n_dup_positions, 0) AS n_dup_positions,
+         |       coalesce(per.n_dup_ngrams, 0) AS n_dup_ngrams
+         |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin),
 
     // corpus-delta dedup: batch = doc_id % 3 == 0 vs corpus = the rest;
     // Bloom prefilter + exact confirm — output equals a plain anti-join
-    "q_bloom_delta" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val corpus = d.filter(col("doc_id").cast("bigint") % 3 =!= 0)
-      val batch = d.filter(col("doc_id").cast("bigint") % 3 === 0)
-      TextOps.bloomDeltaDedup(corpus, batch).select("doc_id", "fp")
-    }),
+    QuerySpec("q_bloom_delta",
+      (s, dir) => {
+        val d = docs(s, dir)
+        val corpus = d.filter(col("doc_id").cast("bigint") % 3 =!= 0)
+        val batch = d.filter(col("doc_id").cast("bigint") % 3 === 0)
+        TextOps.bloomDeltaDedup(corpus, batch).select("doc_id", "fp")
+      },
+      // mirrors TextOps.bloomDeltaDedup: the Bloom filter is a pure
+      // prefilter, so the oracle is the plain exact anti-join
+      """WITH f AS (SELECT doc_id,
+        |             md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+        |           FROM documents),
+        |c AS (SELECT fp FROM f WHERE CAST(doc_id AS BIGINT) % 3 != 0),
+        |b AS (SELECT doc_id, fp FROM f WHERE CAST(doc_id AS BIGINT) % 3 = 0)
+        |SELECT doc_id, fp FROM b WHERE fp NOT IN (SELECT fp FROM c)""".stripMargin),
 
-    "q_simhash" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        SimHash64.col(TextOps.wordsCol).as("simhash"))),
+    QuerySpec("q_simhash",
+      (s, dir) =>
+        docs(s, dir).select(col("doc_id"),
+          SimHash64.col(TextOps.wordsCol).as("simhash")),
+      simhashSql),
 
-    "q_fingerprint" -> ((s, dir) =>
-      TextOps.rollingFingerprintRows(docs(s, dir))),
+    QuerySpec("q_fingerprint",
+      (s, dir) =>
+        TextOps.rollingFingerprintRows(docs(s, dir)),
+      // rolling-hash fingerprints: identical integer polynomial per
+      // k-gram (base 31, prime modulus < 2^50 — every intermediate fits
+      // int64 exactly), mod-17 content-defined selection
+      {
+        val pows = Array.iterate(1L, 8)(_ * 31L).reverse
+        val terms = (0 until 8).map(j =>
+          s"CAST(unicode(substring(s, CAST(i + $j AS INT), 1)) AS BIGINT) * CAST(${pows(j)} AS BIGINT)")
+          .mkString(" + ")
+        s"""WITH t AS (SELECT doc_id, lower(text) AS s FROM documents),
+           |g AS (SELECT doc_id, s, unnest(generate_series(1, len(s) - 7)) AS i FROM t),
+           |h AS (SELECT doc_id, ($terms) % 1125899906842597 AS fp FROM g)
+           |SELECT DISTINCT doc_id, fp FROM h WHERE fp % 17 = 0""".stripMargin
+      }),
 
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val pairs = d.select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
-        .join(d.select(col("doc_id").as("b_id")), "b_id")
-        .select("a_id", "b_id")
-      TextOps.ngramJaccard(d, pairs, shingleN = 2)
-        .select(col("a_id"), col("b_id"), col("inter"), col("uni"),
-          round(col("jaccard"), 6).as("jaccard6"))
-    }),
+    QuerySpec("q_ngram_jaccard",
+      (s, dir) => {
+        val d = docs(s, dir)
+        val pairs = d.select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
+          .join(d.select(col("doc_id").as("b_id")), "b_id")
+          .select("a_id", "b_id")
+        TextOps.ngramJaccard(d, pairs, shingleN = 2)
+          .select(col("a_id"), col("b_id"), col("inter"), col("uni"),
+            round(col("jaccard"), 6).as("jaccard6"))
+      },
+      s"""WITH sh AS (
+         |  SELECT doc_id,
+         |         list_distinct(CASE WHEN len($wordsSql) < 2
+         |           THEN [array_to_string($wordsSql, ' ')]
+         |           ELSE list_transform(generate_series(1, len($wordsSql) - 1),
+         |                i -> array_to_string(($wordsSql)[i:i+1], ' ')) END) AS sh
+         |  FROM documents),
+         |pairs AS (
+         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sh AS sha, b.sh AS shb
+         |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)
+         |SELECT a_id, b_id,
+         |       CAST(len(list_intersect(sha, shb)) AS INT) AS inter,
+         |       CAST(len(sha) + len(shb) - len(list_intersect(sha, shb)) AS INT) AS uni,
+         |       round(CAST(len(list_intersect(sha, shb)) AS DOUBLE) /
+         |             greatest(len(sha) + len(shb) - len(list_intersect(sha, shb)), 1), 6) AS jaccard6
+         |FROM pairs""".stripMargin),
 
     // ---- similarity search --------------------------------------------
-    "q_ann_cosine" -> ((s, dir) =>
-      AnnOps.cosineTopK(queryVec, k = 25)(embs(s, dir))
-        .select(col("vec_id"), col("label"), round(col("sim"), 6).as("sim6"))),
+    QuerySpec("q_ann_cosine",
+      (s, dir) =>
+        AnnOps.cosineTopK(queryVec, k = 25)(embs(s, dir))
+          .select(col("vec_id"), col("label"), round(col("sim"), 6).as("sim6")),
+      s"""WITH q AS (SELECT $queryVecSql AS qv),
+         |scored AS (
+         |  SELECT vec_id, label,
+         |         list_dot_product(embedding::DOUBLE[], qv) /
+         |         (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) *
+         |          sqrt(list_dot_product(qv, qv))) AS sim
+         |  FROM embeddings, q)
+         |SELECT vec_id, label, round(sim, 6) AS sim6 FROM scored
+         |ORDER BY sim DESC, vec_id LIMIT 25""".stripMargin),
 
-    "q_near_dup" -> ((s, dir) =>
-      AnnOps.cosineNearDupPairs(planes = 6, dims = 64, threshold = 0.15)(embs(s, dir))
-        .select(col("a_id"), col("b_id"), round(col("sim"), 6).as("sim6"))),
+    QuerySpec("q_near_dup",
+      (s, dir) =>
+        AnnOps.cosineNearDupPairs(planes = 6, dims = 64, threshold = 0.15)(embs(s, dir))
+          .select(col("a_id"), col("b_id"), round(col("sim"), 6).as("sim6")),
+      nearDupSql),
 
-    "q_ann_ivf" -> ((s, dir) =>
-      AnnOps.ivfTopK(queryVec, k = 20, nLists = 16, nProbe = 4)(embs(s, dir))
-        .select(col("vec_id"), col("label"), col("list"),
-          round(col("sim"), 6).as("sim6"))),
+    QuerySpec("q_ann_ivf",
+      (s, dir) =>
+        AnnOps.ivfTopK(queryVec, k = 20, nLists = 16, nProbe = 4)(embs(s, dir))
+          .select(col("vec_id"), col("label"), col("list"),
+            round(col("sim"), 6).as("sim6")),
+      annIvfSql),
 
     // the STORED IVF layout: one deterministic k-means refinement round,
     // list-partitioned parquet write, probe run cold against the stored
     // table (partition pruning — the 100 TB vector-store path)
-    "q_ann_ivf_stored" -> ((s, dir) => {
-      AnnOps.ivfStoredTopK(queryVec, k = 20, nLists = 16, nProbe = 4,
-        kmeansIters = 1, storageDir = sessionStoreDir(s, "graft-ivf-store"))(embs(s, dir))
-        .select(col("vec_id"), col("label"), col("list"),
-          round(col("sim"), 6).as("sim6"))
-    }),
+    QuerySpec("q_ann_ivf_stored",
+      (s, dir) => {
+        AnnOps.ivfStoredTopK(queryVec, k = 20, nLists = 16, nProbe = 4,
+          kmeansIters = 1, storageDir = sessionStoreDir(s, "graft-ivf-store"))(embs(s, dir))
+          .select(col("vec_id"), col("label"), col("list"),
+            round(col("sim"), 6).as("sim6"))
+      },
+      annIvfStoredSql),
 
     // IVF-PQ: product-quantized residual codes over the stored layout —
     // the probe scans only the codes column of the pruned partitions,
     // top-60 ADC candidates exact-reranked via one broadcast join
-    "q_ann_ivf_pq" -> ((s, dir) => {
-      AnnOps.ivfPqStoredTopK(queryVec, k = 20, nLists = 16, nProbe = 4,
-        m = 8, codebookK = 16, nCand = 60,
-        storageDir = sessionStoreDir(s, "graft-ivfpq-store"))(embs(s, dir))
-        .select(col("vec_id"), col("label"), col("list"),
-          round(col("sim"), 6).as("sim6"))
-    }),
+    QuerySpec("q_ann_ivf_pq",
+      (s, dir) => {
+        AnnOps.ivfPqStoredTopK(queryVec, k = 20, nLists = 16, nProbe = 4,
+          m = 8, codebookK = 16, nCand = 60,
+          storageDir = sessionStoreDir(s, "graft-ivfpq-store"))(embs(s, dir))
+          .select(col("vec_id"), col("label"), col("list"),
+            round(col("sim"), 6).as("sim6"))
+      },
+      annIvfPqSql),
 
-    "q_quantize" -> ((s, dir) => {
-      val xf = Map(
-        "x" -> Quantize.XForm(0.03, 100.0),
-        "y" -> Quantize.XForm(0.07, -50.0),
-        "z" -> Quantize.XForm(0.011, 0.0))
-      Quantize.quantize(xf)(pts(s, dir))
-        .select(col("doc_id"), col("span_idx"), col("x_i"), col("y_i"), col("z_i"))
-    }),
+    QuerySpec("q_quantize",
+      (s, dir) => {
+        val xf = Map(
+          "x" -> Quantize.XForm(0.03, 100.0),
+          "y" -> Quantize.XForm(0.07, -50.0),
+          "z" -> Quantize.XForm(0.011, 0.0))
+        Quantize.quantize(xf)(pts(s, dir))
+          .select(col("doc_id"), col("span_idx"), col("x_i"), col("y_i"), col("z_i"))
+      },
+      // writers.las quantization grid: sround = round half away from
+      // zero (Utils::sround / lround), mirrored exactly; literals CAST
+      // to DOUBLE (DuckDB decimals would change the arithmetic type)
+      {
+        def q(c: String, s: String, o: String) =
+          s"""CAST((CASE WHEN (($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) >= 0
+             |THEN floor((($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) + CAST(0.5 AS DOUBLE))
+             |ELSE ceil((($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) - CAST(0.5 AS DOUBLE)) END) AS INT)"""
+            .stripMargin.replace("\n", " ")
+        s"""WITH $P
+           |SELECT doc_id, span_idx,
+           |       ${q("x", "0.03", "100.0")} AS x_i,
+           |       ${q("y", "0.07", "-50.0")} AS y_i,
+           |       ${q("z", "0.011", "0.0")} AS z_i
+           |FROM pts""".stripMargin
+      }),
 
-    "q_ror" -> ((s, dir) => {
-      val sub = pts(s, dir).filter(col("intensity") % 23 === 0)
-      InfoOps.radiusOutlierRemoval(radius = 40.0, minNeighbors = 2, level = 4)(sub)
-        .select("doc_id", "span_idx")
-    }),
+    QuerySpec("q_ror",
+      (s, dir) => {
+        val sub = pts(s, dir).filter(col("intensity") % 23 === 0)
+        InfoOps.radiusOutlierRemoval(radius = 40.0, minNeighbors = 2, level = 4)(sub)
+          .select("doc_id", "span_idx")
+      },
+      s"""WITH $P,
+         |sub AS (SELECT * FROM pts WHERE intensity % 23 = 0),
+         |nn AS (
+         |  SELECT a.doc_id, a.span_idx, count(*) AS c
+         |  FROM sub a JOIN sub b
+         |    ON NOT (a.doc_id = b.doc_id AND a.span_idx = b.span_idx)
+         |   AND sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+         |            + (a.z - b.z) * (a.z - b.z)) <= 40.0
+         |  GROUP BY a.doc_id, a.span_idx)
+         |SELECT doc_id, span_idx FROM nn WHERE c >= 2""".stripMargin),
 
-    "q_knn_query" -> ((s, dir) =>
-      InfoOps.knnQuery(333.3, 444.4, k = 50)(pts(s, dir))
-        .select("doc_id", "span_idx", "x", "y", "dist")),
+    QuerySpec("q_knn_query",
+      (s, dir) =>
+        InfoOps.knnQuery(333.3, 444.4, k = 50)(pts(s, dir))
+          .select("doc_id", "span_idx", "x", "y", "dist"),
+      s"""WITH $P
+         |SELECT doc_id, span_idx, x, y,
+         |       sqrt((x - 333.3) * (x - 333.3) + (y - 444.4) * (y - 444.4)) AS dist
+         |FROM pts
+         |ORDER BY dist, doc_id, span_idx LIMIT 50""".stripMargin),
 
-    "q_salted_agg" -> ((s, dir) => {
-      val tiled = TileOps.splitter(64.0, 0.0, 0.0)(pts(s, dir))
-      SkewOps.saltedAgg(Seq(col("tile_x"), col("tile_y")), salts = 8,
-        partialExprs = Seq(count(lit(1)).as("pn"), sum(col("z")).as("ps")),
-        finalExprs = Seq(sum(col("pn")).as("n"), sum(col("ps")).as("sum_z")))(tiled)
-    }),
+    QuerySpec("q_salted_agg",
+      (s, dir) => {
+        val tiled = TileOps.splitter(64.0, 0.0, 0.0)(pts(s, dir))
+        SkewOps.saltedAgg(Seq(col("tile_x"), col("tile_y")), salts = 8,
+          partialExprs = Seq(count(lit(1)).as("pn"), sum(col("z")).as("ps")),
+          finalExprs = Seq(sum(col("pn")).as("n"), sum(col("ps")).as("sum_z")))(tiled)
+      },
+      s"""WITH $P
+         |SELECT CAST(trunc(x / 64.0) AS INT) AS tile_x,
+         |       CAST(trunc(y / 64.0) AS INT) AS tile_y,
+         |       CAST(count(*) AS BIGINT) AS n, sum(z) AS sum_z
+         |FROM pts GROUP BY 1, 2""".stripMargin),
 
-    "q_adaptive_cells" -> ((s, dir) =>
-      SkewOps.adaptiveCells(budget = 2000, baseLevel = 2, maxLevel = 8)(pts(s, dir))
-        .groupBy(col("cell")).agg(count(lit(1)).as("n"))),
+    QuerySpec("q_adaptive_cells",
+      (s, dir) =>
+        SkewOps.adaptiveCells(budget = 2000, baseLevel = 2, maxLevel = 8)(pts(s, dir))
+          .groupBy(col("cell")).agg(count(lit(1)).as("n")),
+      s"""WITH $P, $adaptiveSql
+         |SELECT cell, CAST(count(*) AS BIGINT) AS n
+         |FROM assigned GROUP BY cell""".stripMargin),
 
     // ---- streaming ----------------------------------------------------
-    "q_stream_window" -> ((s, dir) => {
-      val name = "stream_win_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.StreamOps.runToCompletion(s, s"$dir/events.parquet",
-        df => graft.streaming.StreamOps.windowedStats(df), name)
-        .select(col("win_start"), col("event_type"), col("n"),
-          round(col("sum_value"), 4).as("sum4"))
-    }),
+    QuerySpec("q_stream_window",
+      (s, dir) => {
+        val name = "stream_win_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        graft.streaming.StreamOps.runToCompletion(s, s"$dir/events.parquet",
+          df => graft.streaming.StreamOps.windowedStats(df), name)
+          .select(col("win_start"), col("event_type"), col("n"),
+            round(col("sum_value"), 4).as("sum4"))
+      },
+      """SELECT CAST(epoch(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS win_start,
+        |       event_type, CAST(count(*) AS BIGINT) AS n,
+        |       round(sum(value), 4) AS sum4
+        |FROM events GROUP BY 1, 2""".stripMargin),
 
-    "q_session_window" -> ((s, dir) =>
-      graft.streaming.StreamOps.sessionWindowStats(
-        s.read.parquet(s"$dir/events.parquet"), gap = "30 minutes")
-        .select(col("sess_start"), col("sess_end"), col("user_id"), col("n"),
-          round(col("sum_value"), 4).as("sum4"))),
+    QuerySpec("q_session_window",
+      (s, dir) =>
+        graft.streaming.StreamOps.sessionWindowStats(
+          s.read.parquet(s"$dir/events.parquet"), gap = "30 minutes")
+          .select(col("sess_start"), col("sess_end"), col("user_id"), col("n"),
+            round(col("sum_value"), 4).as("sum4")),
+      // session_window oracle: gaps-and-islands — break when the gap to
+      // the previous event is >= 30 min (Spark merges only ts < end);
+      // session end = last event + gap
+      """WITH o AS (
+        |  SELECT user_id, ts, value,
+        |         CASE WHEN lag(ts) OVER w IS NULL
+        |              OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800 THEN 1 ELSE 0 END AS brk
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |g AS (
+        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+        |                           ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM o)
+        |SELECT CAST(floor(epoch(min(ts))) AS BIGINT) AS sess_start,
+        |       CAST(floor(epoch(max(ts))) + 1800 AS BIGINT) AS sess_end,
+        |       user_id, CAST(count(*) AS BIGINT) AS n,
+        |       round(sum(value), 4) AS sum4
+        |FROM g GROUP BY user_id, sid""".stripMargin),
 
     // ---- multimodal ---------------------------------------------------
-    "q_media_meta" -> ((s, dir) => {
-      val withBlob = docs(s, dir).withColumn("blob",
-        MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
-      MediaOps.mediaMeta("blob")(MediaOps.fakeDecode("blob")(withBlob))
-        .select(col("doc_id"), col("media_size"), col("media_magic"),
-          col("media_hash"), col("decoded.f0").as("f0"), col("decoded.f1").as("f1"))
-    }),
+    QuerySpec("q_media_meta",
+      (s, dir) => {
+        val withBlob = docs(s, dir).withColumn("blob",
+          MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
+        MediaOps.mediaMeta("blob")(MediaOps.fakeDecode("blob")(withBlob))
+          .select(col("doc_id"), col("media_size"), col("media_magic"),
+            col("media_hash"), col("decoded.f0").as("f0"), col("decoded.f1").as("f1"))
+      },
+      """WITH b AS (
+        |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
+        |  FROM documents)
+        |SELECT doc_id,
+        |       CAST(octet_length(blob) AS INT) AS media_size,
+        |       substring(hex(blob), 1, 8) AS media_magic,
+        |       md5(hex(blob)) AS media_hash,
+        |       substring(hex(blob), 1, 4) AS f0,
+        |       substring(hex(blob), 17, 4) AS f1
+        |FROM b""".stripMargin),
 
-    "q_media_frames" -> ((s, dir) => {
-      val withBlob = docs(s, dir).withColumn("blob",
-        MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
-      MediaOps.frameSample("blob", frameBytes = 16, step = 3)(withBlob)
-        .select("doc_id", "frame_idx", "frame_hash")
-    }),
+    QuerySpec("q_media_frames",
+      (s, dir) => {
+        val withBlob = docs(s, dir).withColumn("blob",
+          MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
+        MediaOps.frameSample("blob", frameBytes = 16, step = 3)(withBlob)
+          .select("doc_id", "frame_idx", "frame_hash")
+      },
+      """WITH b AS (
+        |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id, blob, unnest(generate_series(0,
+        |           CAST(floor((octet_length(blob) - 1) / 16) AS INT))) AS frame_idx
+        |  FROM b)
+        |SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
+        |       md5(substring(hex(blob), frame_idx * 32 + 1, 32)) AS frame_hash
+        |FROM f WHERE frame_idx % 3 = 0""".stripMargin),
 
-    "q_media_resize" -> ((s, dir) => {
-      val withBlob = docs(s, dir).withColumn("blob",
-        MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
-      MediaOps.resizeStub("blob", stride = 5)(withBlob)
-        .select("doc_id", "resized_size", "resized_hash")
-    }),
+    QuerySpec("q_media_resize",
+      (s, dir) => {
+        val withBlob = docs(s, dir).withColumn("blob",
+          MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
+        MediaOps.resizeStub("blob", stride = 5)(withBlob)
+          .select("doc_id", "resized_size", "resized_hash")
+      },
+      // resize stub: every 5th byte — hex of the subsampled blob is the
+      // concatenation of the kept bytes' hex pairs
+      """WITH b AS (
+        |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
+        |  FROM documents),
+        |r AS (
+        |  SELECT doc_id, octet_length(blob) AS n, hex(blob) AS hx FROM b),
+        |s AS (
+        |  SELECT doc_id,
+        |         CAST((n + 4) // 5 AS INT) AS resized_size,
+        |         array_to_string(list_transform(
+        |           generate_series(0, CAST((n + 4) // 5 AS INT) - 1),
+        |           i -> substring(hx, CAST(i * 10 + 1 AS INT), 2)), '') AS rhx
+        |  FROM r)
+        |SELECT doc_id, resized_size, md5(rhx) AS resized_hash FROM s""".stripMargin),
 
-    "q_media_features" -> ((s, dir) => {
-      val withBlob = docs(s, dir).withColumn("blob",
-        MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
-      MediaOps.featureStub("blob", dims = 8)(withBlob)
-        .select(col("doc_id"), col("feat_idx"), round(col("feat"), 6).as("feat6"))
-    }),
+    QuerySpec("q_media_features",
+      (s, dir) => {
+        val withBlob = docs(s, dir).withColumn("blob",
+          MediaOps.synthBlob(concat(lit("blob://"), col("doc_id").cast(StringType)), 8))
+        MediaOps.featureStub("blob", dims = 8)(withBlob)
+          .select(col("doc_id"), col("feat_idx"), round(col("feat"), 6).as("feat6"))
+      },
+      // feature stub: byte i / 255 for the first 8 bytes
+      """WITH b AS (
+        |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id, hex(blob) AS hx,
+        |         unnest(generate_series(0, 7)) AS feat_idx
+        |  FROM b)
+        |SELECT doc_id, CAST(feat_idx AS INT) AS feat_idx,
+        |       round(CAST((strpos('0123456789ABCDEF', substring(hx, CAST(feat_idx * 2 + 1 AS INT), 1)) - 1) * 16
+        |             + (strpos('0123456789ABCDEF', substring(hx, CAST(feat_idx * 2 + 2 AS INT), 1)) - 1)
+        |             AS DOUBLE) / CAST(255.0 AS DOUBLE), 6) AS feat6
+        |FROM f""".stripMargin),
 
     // ---- coherent point drift (registration kernel) -------------------
     // The distributed E-step IS the scale-bearing piece of CPD (one pass
@@ -342,46 +826,50 @@ object EntryPipelines {
     // M-step is a driver-side 3x3 SVD), and it is plain GMM-posterior
     // algebra — exactly SQL-expressible. The EM loop itself is pinned by
     // CpdSpec (exact recovery of known transforms).
-    "q_cpd_estep" -> ((s, dir) => {
-      val fixed = pts(s, dir)
-      val n = fixed.count()
-      val st = CpdOps.estepStats(fixed, cpdMoving, cpdSigma2, 0.1, n)
-      def r4(v: Double): Double =
-        BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      import s.implicits._
-      (0 until st.m).map { j =>
-        (j, r4(st.p1(j)), r4(st.px(3 * j)), r4(st.px(3 * j + 1)), r4(st.px(3 * j + 2)))
-      }.toDF("j", "p1", "px0", "px1", "px2")
-    })
+    QuerySpec("q_cpd_estep",
+      (s, dir) => {
+        val fixed = pts(s, dir)
+        val n = fixed.count()
+        val st = CpdOps.estepStats(fixed, cpdMoving, cpdSigma2, 0.1, n)
+        def r4(v: Double): Double =
+          BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        import s.implicits._
+        (0 until st.m).map { j =>
+          (j, r4(st.p1(j)), r4(st.px(3 * j)), r4(st.px(3 * j + 1)), r4(st.px(3 * j + 2)))
+        }.toDF("j", "p1", "px0", "px1", "px2")
+      },
+      // CPD E-step sufficient statistics: per-moving-point posterior
+      // column sums p1 and first moments px against the full fixed
+      // cloud, with the paper's uniform-outlier denominator term
+      // (Myronenko & Song 2010 eq. 6 / Fig. 2 E-step). Rounded to 4
+      // decimals on both sides: the values are O(10^2..10^5) sums of
+      // 60k exp() terms, so reassociation noise (~1e-8 absolute) sits
+      // four orders below the rounding grid.
+      s"""WITH $P,
+         |mov AS (SELECT CAST(j AS INT) AS j,
+         |               100.0 + 40.0 * j AS m0,
+         |               200.0 + 30.0 * (j % 5) AS m1,
+         |               50.0 + 10.0 * j AS m2
+         |        FROM range(0, 20) t(j)),
+         |wts AS (SELECT p.doc_id, p.span_idx, p.x, p.y, p.z, m.j,
+         |               exp(-((p.x - m.m0) * (p.x - m.m0) + (p.y - m.m1) * (p.y - m.m1)
+         |                     + (p.z - m.m2) * (p.z - m.m2)) / 80000.0) AS e
+         |        FROM pts p CROSS JOIN mov m),
+         |post AS (SELECT j, x, y, z,
+         |                e / (pow(2 * pi() * 40000.0, 1.5) * (0.1 / 0.9) * 20.0
+         |                       / (SELECT count(*) FROM pts)
+         |                     + sum(e) OVER (PARTITION BY doc_id, span_idx)) AS pp
+         |         FROM wts)
+         |SELECT j, round(sum(pp), 4) AS p1,
+         |       round(sum(pp * x), 4) AS px0,
+         |       round(sum(pp * y), 4) AS px1,
+         |       round(sum(pp * z), 4) AS px2
+         |FROM post GROUP BY j""".stripMargin)
   )
 
-  /** Deterministic 20-point moving cloud for the CPD E-step oracle —
-    * literal in both the Spark query and the SQL twin. */
-  private val cpdMoving: Array[Double] =
-    (0 until 20).flatMap(j => Seq(100.0 + 40.0 * j, 200.0 + 30.0 * (j % 5), 50.0 + 10.0 * j)).toArray
-  private val cpdSigma2: Double = 40000.0
-
   // ---------------------------------------------------------------------
-  // Oracle SQL twins
+  // Oracle SQL builders
   // ---------------------------------------------------------------------
-
-  /** Morton key SQL (shared with SparkEntry.mortonSql — default space,
-    * exact 2^20 scale). */
-  def mortonSqlShared(xc: String, yc: String): String = {
-    def spread(v: String): String = {
-      val s1 = s"((($v) | (($v) << 16)) & 281470681808895)"
-      val s2 = s"((($s1) | (($s1) << 8)) & 71777214294589695)"
-      val s3 = s"((($s2) | (($s2) << 4)) & 1085102592571150095)"
-      val s4 = s"((($s3) | (($s3) << 2)) & 3689348814741910323)"
-      s"((($s4) | (($s4) << 1)) & 6148914691236517205)"
-    }
-    val ix = s"CAST(($xc) * 1048576 AS BIGINT)"
-    val iy = s"CAST(($yc) * 1048576 AS BIGINT)"
-    s"(${spread(ix)} | (${spread(iy)} << 1))"
-  }
-
-  private val wordsSql = TextOps.wordsSql
-  import TextOps.sqlList
 
   /** Hex cube-round mirroring HexGrid.hexCell (floor(v+0.5) = Java
     * Math.round, NOT SQL round which is half-away-from-zero). */
@@ -411,539 +899,6 @@ object EntryPipelines {
        |  FROM hx3)""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = {
-    val P = Oracle.pointsCte
-    Map(
-      // EXACT kNN oracle (no grid mirroring): a 64-unit x/y band join is a
-      // pure candidate PREFILTER — any neighbor within euclidean 64 of a
-      // point satisfies |dx|<=64 and |dy|<=64, so the per-point nearest-1
-      // is exact whenever its distance is <= 64. The `cert`/`missing` CTEs
-      // verify that IN SQL and emit a loud poison row (breaking the hash
-      // compare) if the band were ever too narrow — the oracle can be
-      // fast without trusting the engine's grid.
-      //
-      // DETERMINISM (the r2 recipe, applied to selection rather than
-      // aggregation): the winner per point is the MINIMUM of the pair
-      // set under the total order (dist, cdoc, cspan) — a pure
-      // comparison, never a float SUM, so no partial-aggregation
-      // reassociation can flip it between partitionings; the engine's
-      // min_by over the identical (d2, id) struct ordering picks the
-      // same row bit-for-bit (ties included, because the id tail makes
-      // the order total). dx/dy/dz are then single subtractions of
-      // stored doubles on the winning row — identical in both systems.
-      // The shuffle.partitions 4-vs-32 invariance spec pins the engine
-      // side (OperatorBehaviorSpec "delta nearest-1 is bit-identical").
-      "q_knn_delta" ->
-        s"""WITH $P,
-           |src AS (SELECT * FROM pts WHERE intensity % 89 = 0),
-           |cand AS (SELECT * FROM pts WHERE intensity % 97 = 0),
-           |pairs AS (
-           |  SELECT s.doc_id, s.span_idx,
-           |         s.x - c.x AS dx, s.y - c.y AS dy, s.z - c.z AS dz,
-           |         sqrt((s.x - c.x) * (s.x - c.x) + (s.y - c.y) * (s.y - c.y)) AS dist,
-           |         c.doc_id AS cdoc, c.span_idx AS cspan
-           |  FROM src s JOIN cand c
-           |    ON c.x BETWEEN s.x - 256.0 AND s.x + 256.0
-           |   AND c.y BETWEEN s.y - 256.0 AND s.y + 256.0),
-           |n1 AS (
-           |  SELECT doc_id, span_idx, dx, dy, dz, dist FROM pairs
-           |  QUALIFY row_number() OVER (PARTITION BY doc_id, span_idx
-           |                             ORDER BY dist, cdoc, cspan) = 1),
-           |cert AS (SELECT count(*) AS bad FROM n1 WHERE dist > 256.0),
-           |missing AS (
-           |  SELECT count(*) AS miss FROM src s
-           |  WHERE NOT EXISTS (SELECT 1 FROM n1 n
-           |                    WHERE n.doc_id = s.doc_id AND n.span_idx = s.span_idx)
-           |    AND (SELECT count(*) FROM cand) > 0)
-           |SELECT doc_id, span_idx, dx, dy, dz FROM n1
-           |UNION ALL
-           |SELECT 'ORACLE_BAND_TOO_NARROW', -1, CAST(NULL AS DOUBLE),
-           |       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-           |FROM cert, missing WHERE cert.bad > 0 OR missing.miss > 0""".stripMargin,
-
-      // EXACT SOR oracle: same band-prefilter + in-SQL certificate
-      // discipline (kth-nearest distance must stay within the band, and
-      // every point must appear) — mirrors nothing about the engine's
-      // grid levels. The per-point mean distance is the engine's exact
-      // arithmetic (ascending sequential sum / 4), and the global
-      // threshold is rebuilt from 1e-6-quantized integer moments with
-      // the engine's fixed scalar op sequence, so membership is
-      // bit-identical — no accumulation-order exposure anywhere.
-      "q_sor" ->
-        s"""WITH $P,
-           |sub AS (SELECT * FROM pts WHERE intensity % 19 = 0),
-           |pairs AS (
-           |  SELECT a.doc_id, a.span_idx,
-           |         sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-           |              + (a.z - b.z) * (a.z - b.z)) AS dist,
-           |         b.doc_id AS bdoc, b.span_idx AS bspan
-           |  FROM sub a JOIN sub b
-           |    ON b.x BETWEEN a.x - 256.0 AND a.x + 256.0
-           |   AND b.y BETWEEN a.y - 256.0 AND a.y + 256.0
-           |   AND NOT (a.doc_id = b.doc_id AND a.span_idx = b.span_idx)),
-           |knn AS (
-           |  SELECT doc_id, span_idx, dist,
-           |         row_number() OVER (PARTITION BY doc_id, span_idx
-           |                            ORDER BY dist, bdoc, bspan) AS rn
-           |  FROM pairs),
-           |md AS (
-           |  SELECT doc_id, span_idx,
-           |         list_reduce(list(dist ORDER BY dist), (a, b) -> a + b) / 4 AS md,
-           |         max(dist) AS kd, count(*) AS nk
-           |  FROM knn WHERE rn <= 4 GROUP BY doc_id, span_idx),
-           |cert AS (SELECT count(*) AS bad FROM md WHERE nk < 4 OR kd > 256.0),
-           |missing AS (
-           |  SELECT count(*) AS miss FROM sub s
-           |  WHERE NOT EXISTS (SELECT 1 FROM md m
-           |                    WHERE m.doc_id = s.doc_id AND m.span_idx = s.span_idx)
-           |    AND (SELECT count(*) FROM sub) > 1),
-           |qmd AS (
-           |  SELECT doc_id, span_idx,
-           |         CAST(floor(md * CAST(1000000 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
-           |  FROM md),
-           |mom AS (
-           |  SELECT CAST(CAST(sum(q) AS HUGEINT) AS DOUBLE) AS s1,
-           |         CAST(sum(CAST(q AS HUGEINT) * CAST(q AS HUGEINT)) AS DOUBLE) AS s2,
-           |         count(*) AS n
-           |  FROM qmd),
-           |th AS (
-           |  SELECT s1 / n + CAST(1.0 AS DOUBLE) *
-           |         sqrt(greatest((s2 - s1 * s1 / n) / (n - 1), CAST(0 AS DOUBLE))) AS t
-           |  FROM mom)
-           |SELECT qmd.doc_id, qmd.span_idx FROM qmd, th WHERE qmd.q <= th.t
-           |UNION ALL
-           |SELECT 'ORACLE_BAND_TOO_NARROW', -1
-           |FROM cert, missing WHERE cert.bad > 0 OR missing.miss > 0""".stripMargin,
-
-      "q_p2g" ->
-        s"""WITH $P,
-           |base AS (
-           |  SELECT x, y, z,
-           |         CAST(floor(x / 32) AS BIGINT) AS cx0,
-           |         CAST(floor(y / 32) AS BIGINT) AS cy0
-           |  FROM pts),
-           |expanded AS (
-           |  SELECT x, y, z, cx0 + ox.o AS px, cy0 + oy.o AS py
-           |  FROM base
-           |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
-           |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)),
-           |gated AS (
-           |  SELECT *,
-           |         sqrt((x - ((px + 0.5) * 32.0)) * (x - ((px + 0.5) * 32.0))
-           |            + (y - ((py + 0.5) * 32.0)) * (y - ((py + 0.5) * 32.0))) AS dist
-           |  FROM expanded)
-           |SELECT px, py, CAST(count(*) AS BIGINT) AS den,
-           |       min(z) AS zmin, max(z) AS zmax, sum(z) / count(*) AS zmean,
-           |       round(sum(z / greatest(dist, 1e-12)) / sum(1.0 / greatest(dist, 1e-12)), 5) AS zidw5,
-           |       round(stddev_pop(z), 5) AS zstd5
-           |FROM gated WHERE dist <= 22.6 GROUP BY px, py""".stripMargin,
-
-      "q_p2g_fill" ->
-        s"""WITH $P,
-           |base AS (
-           |  SELECT x, y, z,
-           |         CAST(floor(x / 32) AS BIGINT) AS cx0,
-           |         CAST(floor(y / 32) AS BIGINT) AS cy0
-           |  FROM pts),
-           |expanded AS (
-           |  SELECT x, y, z, cx0 + ox.o AS px, cy0 + oy.o AS py
-           |  FROM base
-           |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
-           |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)),
-           |gated AS (
-           |  SELECT *,
-           |         sqrt((x - ((px + 0.5) * 32.0)) * (x - ((px + 0.5) * 32.0))
-           |            + (y - ((py + 0.5) * 32.0)) * (y - ((py + 0.5) * 32.0))) AS dist
-           |  FROM expanded),
-           |cells AS (
-           |  SELECT px, py, CAST(count(*) AS BIGINT) AS den,
-           |         min(z) AS zmin, max(z) AS zmax, sum(z) / count(*) AS zmean,
-           |         sum(z / greatest(dist, 1e-12)) / sum(1.0 / greatest(dist, 1e-12)) AS zidw,
-           |         stddev_pop(z) AS zstd
-           |  FROM gated WHERE dist <= 22.6 GROUP BY px, py),
-           |ext AS (
-           |  SELECT min(px) AS pxmin, max(px) AS pxmax,
-           |         min(py) AS pymin, max(py) AS pymax FROM cells),
-           |cand AS (
-           |  SELECT c.px + ox.o AS px, c.py + oy.o AS py,
-           |         CAST(greatest(abs(ox.o), abs(oy.o)) AS DOUBLE) AS fd,
-           |         c.zmin, c.zmax, c.zmean, c.zstd, c.zidw
-           |  FROM cells c
-           |  CROSS JOIN (VALUES (-1), (0), (1)) ox(o)
-           |  CROSS JOIN (VALUES (-1), (0), (1)) oy(o)
-           |  WHERE NOT (ox.o = 0 AND oy.o = 0)),
-           |filled AS (
-           |  SELECT cand.px, cand.py, CAST(0 AS BIGINT) AS den,
-           |         sum(zmin / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmin,
-           |         sum(zmax / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmax,
-           |         sum(zmean / (fd * fd)) / sum(1.0 / (fd * fd)) AS zmean,
-           |         sum(zidw / (fd * fd)) / sum(1.0 / (fd * fd)) AS zidw,
-           |         sum(zstd / (fd * fd)) / sum(1.0 / (fd * fd)) AS zstd
-           |  FROM cand, ext
-           |  WHERE cand.px BETWEEN ext.pxmin AND ext.pxmax
-           |    AND cand.py BETWEEN ext.pymin AND ext.pymax
-           |    AND NOT EXISTS (SELECT 1 FROM cells c2
-           |                    WHERE c2.px = cand.px AND c2.py = cand.py)
-           |  GROUP BY cand.px, cand.py)
-           |SELECT px, py, den,
-           |       round(zmin, 5) AS zmin5, round(zmax, 5) AS zmax5,
-           |       round(zmean, 5) AS zmean5, round(zidw, 5) AS zidw5,
-           |       round(zstd, 5) AS zstd5
-           |FROM (SELECT * FROM cells UNION ALL SELECT * FROM filled)""".stripMargin,
-
-      "q_hexbin" ->
-        s"""WITH $P, $hexSql
-           |SELECT CAST(hq0 AS INT) AS hex_q, CAST(hr0 AS INT) AS hex_r,
-           |       CAST(count(*) AS BIGINT) AS density
-           |FROM hex GROUP BY 1, 2""".stripMargin,
-
-      "q_reproject" ->
-        s"""WITH $P
-           |SELECT doc_id, span_idx,
-           |       round(((x - 512) * 50000) / 6378137.0 * (180.0 / pi()), 9) AS lon9,
-           |       round((2.0 * atan(exp(((y - 512) * 20000) / 6378137.0)) - pi() / 2.0)
-           |             * (180.0 / pi()), 9) AS lat9
-           |FROM pts""".stripMargin,
-
-      "q_grid_shift" -> gridShiftSql,
-
-      "q_token_count" ->
-        """SELECT doc_id,
-          |       CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS n_ws_tokens,
-          |       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_subword_units,
-          |       CAST(length(text) AS INT) AS len
-          |FROM documents""".stripMargin,
-
-      "q_token_bpe" ->
-        s"""SELECT doc_id,
-           |       CAST(length(s) - length(replace(s, chr(31), '')) - 1 AS INT) AS n_bpe
-           |FROM (SELECT doc_id, ${TextOps.Bpe.oracleTokenString("text")} AS s
-           |      FROM documents)""".stripMargin,
-
-      "q_quality" ->
-        s"""WITH q AS (
-           |  SELECT doc_id,
-           |         CAST(length(text) AS INT) AS len,
-           |         CAST(len($wordsSql) AS INT) AS n_words,
-           |         CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.enStop)}, w))) AS INT) AS n_stop,
-           |         len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
-           |         len(regexp_extract_all(text, '[.,!?;:]')) AS n_punct
-           |  FROM documents)
-           |SELECT doc_id, len, n_words, n_stop,
-           |       round(CAST(n_alpha AS DOUBLE) / greatest(len, 1), 6) AS alpha6,
-           |       round(CAST(n_punct AS DOUBLE) / greatest(len, 1), 6) AS punct6,
-           |       round(CAST(n_stop AS DOUBLE) / greatest(n_words, 1), 6) AS stop6
-           |FROM q""".stripMargin,
-
-      "q_langid" ->
-        s"""WITH s AS (
-           |  SELECT doc_id,
-           |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.enStop)}, w))) AS INT) AS en,
-           |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.deStop)}, w))) AS INT) AS de,
-           |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.frStop)}, w))) AS INT) AS fr,
-           |    CAST(len(list_filter($wordsSql, w -> list_contains(${sqlList(TextOps.esStop)}, w))) AS INT) AS es
-           |  FROM documents)
-           |SELECT doc_id, en, de, fr, es,
-           |       CASE WHEN greatest(en, de, fr, es) = 0 THEN 'und'
-           |            WHEN de = greatest(en, de, fr, es) THEN 'de'
-           |            WHEN en = greatest(en, de, fr, es) THEN 'en'
-           |            WHEN es = greatest(en, de, fr, es) THEN 'es'
-           |            ELSE 'fr' END AS lang_pred
-           |FROM s""".stripMargin,
-
-      "q_dedup_exact" ->
-        """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
-          |       min(doc_id) AS rep_doc_id, CAST(count(*) AS BIGINT) AS n_dups
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "q_minhash_dedup" -> minhashDedupSql,
-
-      "q_dedup_cc" -> dedupCcSql,
-
-      // mirrors TextOps.substringDup(n=6): md5 over the same 6-word
-      // shingle strings, dup = corpus-wide count > 1, zeros kept
-      "q_substring_dup" ->
-        s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents),
-           |g AS (SELECT doc_id,
-           |        UNNEST(list_transform(range(1, len(ws) - 6 + 2),
-           |          i -> md5(array_to_string(list_slice(ws, i, i + 5), ' ')))) AS g
-           |      FROM w),
-           |dup AS (SELECT g FROM g GROUP BY g HAVING count(*) > 1),
-           |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_positions,
-           |               CAST(count(DISTINCT g) AS BIGINT) AS n_dup_ngrams
-           |        FROM g JOIN dup USING (g) GROUP BY 1)
-           |SELECT d.doc_id,
-           |       coalesce(per.n_dup_positions, 0) AS n_dup_positions,
-           |       coalesce(per.n_dup_ngrams, 0) AS n_dup_ngrams
-           |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin,
-
-      // mirrors TextOps.bloomDeltaDedup: the Bloom filter is a pure
-      // prefilter, so the oracle is the plain exact anti-join
-      "q_bloom_delta" ->
-        """WITH f AS (SELECT doc_id,
-          |             md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-          |           FROM documents),
-          |c AS (SELECT fp FROM f WHERE CAST(doc_id AS BIGINT) % 3 != 0),
-          |b AS (SELECT doc_id, fp FROM f WHERE CAST(doc_id AS BIGINT) % 3 = 0)
-          |SELECT doc_id, fp FROM b WHERE fp NOT IN (SELECT fp FROM c)""".stripMargin,
-
-      "q_near_dup" -> nearDupSql,
-
-      "q_ann_ivf" -> annIvfSql,
-      "q_ann_ivf_stored" -> annIvfStoredSql,
-      "q_ann_ivf_pq" -> annIvfPqSql,
-
-      // writers.las quantization grid: sround = round half away from
-      // zero (Utils::sround / lround), mirrored exactly; literals CAST
-      // to DOUBLE (DuckDB decimals would change the arithmetic type)
-      "q_quantize" -> {
-        def q(c: String, s: String, o: String) =
-          s"""CAST((CASE WHEN (($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) >= 0
-             |THEN floor((($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) + CAST(0.5 AS DOUBLE))
-             |ELSE ceil((($c - CAST($o AS DOUBLE)) / CAST($s AS DOUBLE)) - CAST(0.5 AS DOUBLE)) END) AS INT)"""
-            .stripMargin.replace("\n", " ")
-        s"""WITH $P
-           |SELECT doc_id, span_idx,
-           |       ${q("x", "0.03", "100.0")} AS x_i,
-           |       ${q("y", "0.07", "-50.0")} AS y_i,
-           |       ${q("z", "0.011", "0.0")} AS z_i
-           |FROM pts""".stripMargin
-      },
-
-      "q_simhash" -> simhashSql,
-
-      // rolling-hash fingerprints: identical integer polynomial per
-      // k-gram (base 31, prime modulus < 2^50 — every intermediate fits
-      // int64 exactly), mod-17 content-defined selection
-      "q_fingerprint" -> {
-        val pows = Array.iterate(1L, 8)(_ * 31L).reverse
-        val terms = (0 until 8).map(j =>
-          s"CAST(unicode(substring(s, CAST(i + $j AS INT), 1)) AS BIGINT) * CAST(${pows(j)} AS BIGINT)")
-          .mkString(" + ")
-        s"""WITH t AS (SELECT doc_id, lower(text) AS s FROM documents),
-           |g AS (SELECT doc_id, s, unnest(generate_series(1, len(s) - 7)) AS i FROM t),
-           |h AS (SELECT doc_id, ($terms) % 1125899906842597 AS fp FROM g)
-           |SELECT DISTINCT doc_id, fp FROM h WHERE fp % 17 = 0""".stripMargin
-      },
-
-      "q_ngram_jaccard" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id,
-           |         list_distinct(CASE WHEN len($wordsSql) < 2
-           |           THEN [array_to_string($wordsSql, ' ')]
-           |           ELSE list_transform(generate_series(1, len($wordsSql) - 1),
-           |                i -> array_to_string(($wordsSql)[i:i+1], ' ')) END) AS sh
-           |  FROM documents),
-           |pairs AS (
-           |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sh AS sha, b.sh AS shb
-           |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)
-           |SELECT a_id, b_id,
-           |       CAST(len(list_intersect(sha, shb)) AS INT) AS inter,
-           |       CAST(len(sha) + len(shb) - len(list_intersect(sha, shb)) AS INT) AS uni,
-           |       round(CAST(len(list_intersect(sha, shb)) AS DOUBLE) /
-           |             greatest(len(sha) + len(shb) - len(list_intersect(sha, shb)), 1), 6) AS jaccard6
-           |FROM pairs""".stripMargin,
-
-      "q_adaptive_cells" ->
-        s"""WITH $P, $adaptiveSql
-           |SELECT cell, CAST(count(*) AS BIGINT) AS n
-           |FROM assigned GROUP BY cell""".stripMargin,
-
-      "q_pmf_ground" ->
-        s"""WITH $P, $pmfSql
-           |SELECT classification, CAST(count(*) AS BIGINT) AS n
-           |FROM classified GROUP BY classification""".stripMargin,
-
-      "q_pmf_exact" ->
-        s"""WITH $P, $pmfExactSql
-           |SELECT doc_id, span_idx, cls FROM exact_classified""".stripMargin,
-
-      "q_ann_lsh" -> annLshSql,
-
-      // KEEP IN SYNC with PclBlock.run: min-bounds shift, float32
-      // narrowing (CAST AS REAL), PassThrough offset-adjusted limits,
-      // VoxelGrid centroids on the shifted lattice, unshift
-      "q_pclblock" ->
-        s"""WITH $P,
-           |m AS (SELECT min(x) AS mx, min(y) AS my, min(z) AS mz FROM pts),
-           |sh AS (
-           |  SELECT CAST(CAST(p.x - m.mx AS REAL) AS DOUBLE) AS xs,
-           |         CAST(CAST(p.y - m.my AS REAL) AS DOUBLE) AS ys,
-           |         CAST(CAST(p.z - m.mz AS REAL) AS DOUBLE) AS zs
-           |  FROM pts p CROSS JOIN m),
-           |pt AS (
-           |  SELECT sh.* FROM sh CROSS JOIN m
-           |  WHERE zs >= 100.0 - m.mz AND zs <= 300.0 - m.mz),
-           |vox AS (
-           |  SELECT CAST(floor(xs / 64.0) AS BIGINT) AS vx,
-           |         CAST(floor(ys / 64.0) AS BIGINT) AS vy,
-           |         CAST(floor(zs / 16.0) AS BIGINT) AS vz,
-           |         sum(xs) / count(*) AS cx, sum(ys) / count(*) AS cy,
-           |         sum(zs) / count(*) AS cz
-           |  FROM pt GROUP BY 1, 2, 3)
-           |SELECT cx + m.mx AS x, cy + m.my AS y, cz + m.mz AS z
-           |FROM vox CROSS JOIN m""".stripMargin,
-
-      "q_ann_cosine" ->
-        s"""WITH q AS (SELECT $queryVecSql AS qv),
-           |scored AS (
-           |  SELECT vec_id, label,
-           |         list_dot_product(embedding::DOUBLE[], qv) /
-           |         (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) *
-           |          sqrt(list_dot_product(qv, qv))) AS sim
-           |  FROM embeddings, q)
-           |SELECT vec_id, label, round(sim, 6) AS sim6 FROM scored
-           |ORDER BY sim DESC, vec_id LIMIT 25""".stripMargin,
-
-      "q_ror" ->
-        s"""WITH $P,
-           |sub AS (SELECT * FROM pts WHERE intensity % 23 = 0),
-           |nn AS (
-           |  SELECT a.doc_id, a.span_idx, count(*) AS c
-           |  FROM sub a JOIN sub b
-           |    ON NOT (a.doc_id = b.doc_id AND a.span_idx = b.span_idx)
-           |   AND sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-           |            + (a.z - b.z) * (a.z - b.z)) <= 40.0
-           |  GROUP BY a.doc_id, a.span_idx)
-           |SELECT doc_id, span_idx FROM nn WHERE c >= 2""".stripMargin,
-
-      "q_chipper" ->
-        s"""WITH $P,
-           |c AS (SELECT CAST(count(*) AS BIGINT) AS total FROM pts),
-           |m AS (SELECT total, CAST(ceil(total / 4096.0) AS BIGINT) AS nchips FROM c),
-           |idx AS (SELECT unnest(generate_series(0, nchips - 1)) AS chip, total, nchips FROM m)
-           |SELECT CAST(chip AS INT) AS chip,
-           |       CAST(round((CAST(chip AS DOUBLE) + 1) * total / nchips)
-           |            - round(CAST(chip AS DOUBLE) * total / nchips) AS BIGINT) AS n
-           |FROM idx""".stripMargin,
-
-      "q_knn_query" ->
-        s"""WITH $P
-           |SELECT doc_id, span_idx, x, y,
-           |       sqrt((x - 333.3) * (x - 333.3) + (y - 444.4) * (y - 444.4)) AS dist
-           |FROM pts
-           |ORDER BY dist, doc_id, span_idx LIMIT 50""".stripMargin,
-
-      "q_salted_agg" ->
-        s"""WITH $P
-           |SELECT CAST(trunc(x / 64.0) AS INT) AS tile_x,
-           |       CAST(trunc(y / 64.0) AS INT) AS tile_y,
-           |       CAST(count(*) AS BIGINT) AS n, sum(z) AS sum_z
-           |FROM pts GROUP BY 1, 2""".stripMargin,
-
-      "q_stream_window" ->
-        """SELECT CAST(epoch(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS win_start,
-          |       event_type, CAST(count(*) AS BIGINT) AS n,
-          |       round(sum(value), 4) AS sum4
-          |FROM events GROUP BY 1, 2""".stripMargin,
-
-      // session_window oracle: gaps-and-islands — break when the gap to
-      // the previous event is >= 30 min (Spark merges only ts < end);
-      // session end = last event + gap
-      "q_session_window" ->
-        """WITH o AS (
-          |  SELECT user_id, ts, value,
-          |         CASE WHEN lag(ts) OVER w IS NULL
-          |              OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800 THEN 1 ELSE 0 END AS brk
-          |  FROM events
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |g AS (
-          |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-          |                           ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM o)
-          |SELECT CAST(floor(epoch(min(ts))) AS BIGINT) AS sess_start,
-          |       CAST(floor(epoch(max(ts))) + 1800 AS BIGINT) AS sess_end,
-          |       user_id, CAST(count(*) AS BIGINT) AS n,
-          |       round(sum(value), 4) AS sum4
-          |FROM g GROUP BY user_id, sid""".stripMargin,
-
-      "q_media_meta" ->
-        """WITH b AS (
-          |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
-          |  FROM documents)
-          |SELECT doc_id,
-          |       CAST(octet_length(blob) AS INT) AS media_size,
-          |       substring(hex(blob), 1, 8) AS media_magic,
-          |       md5(hex(blob)) AS media_hash,
-          |       substring(hex(blob), 1, 4) AS f0,
-          |       substring(hex(blob), 17, 4) AS f1
-          |FROM b""".stripMargin,
-
-      "q_media_frames" ->
-        """WITH b AS (
-          |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
-          |  FROM documents),
-          |f AS (
-          |  SELECT doc_id, blob, unnest(generate_series(0,
-          |           CAST(floor((octet_length(blob) - 1) / 16) AS INT))) AS frame_idx
-          |  FROM b)
-          |SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
-          |       md5(substring(hex(blob), frame_idx * 32 + 1, 32)) AS frame_hash
-          |FROM f WHERE frame_idx % 3 = 0""".stripMargin,
-
-      // resize stub: every 5th byte — hex of the subsampled blob is the
-      // concatenation of the kept bytes' hex pairs
-      "q_media_resize" ->
-        """WITH b AS (
-          |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
-          |  FROM documents),
-          |r AS (
-          |  SELECT doc_id, octet_length(blob) AS n, hex(blob) AS hx FROM b),
-          |s AS (
-          |  SELECT doc_id,
-          |         CAST((n + 4) // 5 AS INT) AS resized_size,
-          |         array_to_string(list_transform(
-          |           generate_series(0, CAST((n + 4) // 5 AS INT) - 1),
-          |           i -> substring(hx, CAST(i * 10 + 1 AS INT), 2)), '') AS rhx
-          |  FROM r)
-          |SELECT doc_id, resized_size, md5(rhx) AS resized_hash FROM s""".stripMargin,
-
-      // feature stub: byte i / 255 for the first 8 bytes
-      "q_media_features" ->
-        """WITH b AS (
-          |  SELECT doc_id, repeat(unhex(md5('blob://' || CAST(doc_id AS VARCHAR))), 8) AS blob
-          |  FROM documents),
-          |f AS (
-          |  SELECT doc_id, hex(blob) AS hx,
-          |         unnest(generate_series(0, 7)) AS feat_idx
-          |  FROM b)
-          |SELECT doc_id, CAST(feat_idx AS INT) AS feat_idx,
-          |       round(CAST((strpos('0123456789ABCDEF', substring(hx, CAST(feat_idx * 2 + 1 AS INT), 1)) - 1) * 16
-          |             + (strpos('0123456789ABCDEF', substring(hx, CAST(feat_idx * 2 + 2 AS INT), 1)) - 1)
-          |             AS DOUBLE) / CAST(255.0 AS DOUBLE), 6) AS feat6
-          |FROM f""".stripMargin,
-
-      // CPD E-step sufficient statistics: per-moving-point posterior
-      // column sums p1 and first moments px against the full fixed
-      // cloud, with the paper's uniform-outlier denominator term
-      // (Myronenko & Song 2010 eq. 6 / Fig. 2 E-step). Rounded to 4
-      // decimals on both sides: the values are O(10^2..10^5) sums of
-      // 60k exp() terms, so reassociation noise (~1e-8 absolute) sits
-      // four orders below the rounding grid.
-      "q_cpd_estep" ->
-        s"""WITH $P,
-           |mov AS (SELECT CAST(j AS INT) AS j,
-           |               100.0 + 40.0 * j AS m0,
-           |               200.0 + 30.0 * (j % 5) AS m1,
-           |               50.0 + 10.0 * j AS m2
-           |        FROM range(0, 20) t(j)),
-           |wts AS (SELECT p.doc_id, p.span_idx, p.x, p.y, p.z, m.j,
-           |               exp(-((p.x - m.m0) * (p.x - m.m0) + (p.y - m.m1) * (p.y - m.m1)
-           |                     + (p.z - m.m2) * (p.z - m.m2)) / 80000.0) AS e
-           |        FROM pts p CROSS JOIN mov m),
-           |post AS (SELECT j, x, y, z,
-           |                e / (pow(2 * pi() * 40000.0, 1.5) * (0.1 / 0.9) * 20.0
-           |                       / (SELECT count(*) FROM pts)
-           |                     + sum(e) OVER (PARTITION BY doc_id, span_idx)) AS pp
-           |         FROM wts)
-           |SELECT j, round(sum(pp), 4) AS p1,
-           |       round(sum(pp * x), 4) AS px0,
-           |       round(sum(pp * y), 4) AS px1,
-           |       round(sum(pp * z), 4) AS px2
-           |FROM post GROUP BY j""".stripMargin
-    )
-  }
-
   /** Adaptive-cells oracle: mirrors SkewOps.adaptiveCells(budget=2000,
     * base=2, max=8) — per-level subtree counts, split set = over-budget
     * cells below max level, final cell = descend while split. The level
@@ -952,7 +907,7 @@ object EntryPipelines {
   private def adaptiveSql: String = {
     val base = 2; val max = 8; val budget = 2000
     def cellAt(l: Int) =
-      s"((${mortonSqlShared("x", "y")} >> ${2 * (30 - l)}) << 6) | $l"
+      s"((${mortonSql("x", "y")} >> ${2 * (30 - l)}) << 6) | $l"
     val cellCols = (base to max).map(l => s"(${cellAt(l)}) AS c$l").mkString(",\n      |         ")
     val countCtes = (base until max).map(l =>
       s"cnt$l AS (SELECT c$l AS cell, count(*) AS n FROM cells GROUP BY 1)")
@@ -1270,7 +1225,6 @@ object EntryPipelines {
     * are bit-identical before the round(9). Keep in sync with
     * Ntv2.bilinear/forward and Ntv2.demoLatShift/demoLonShift. */
   private def gridShiftSql: String = {
-    val P = Oracle.pointsCte
     s"""WITH $P, geo AS (
        |  SELECT doc_id, span_idx,
        |         (-125.0 + x * (9.0/1024)) AS lon,

@@ -182,14 +182,6 @@ object PolygonCover {
     CellCover(interior.result(), boundary.result())
   }
 
-  /** Uniform-level cover (every cell at `level`) for plain equi-joins.
-    * CAUTION: interior uncompacts to O(area / cellsize²) — prefer
-    * [[cover]] (compact) + ancestor-cell joins at scale. */
-  def coverAtLevel(geom: Geometry, space: CellSpace, level: Int): CellCover = {
-    val c = cover(geom, space, level)
-    CellCover(c.interior.flatMap(space.uncompact(_, level)), c.boundary)
-  }
-
   /** Pick a boundary resolution so a compact cover stays ~`targetCells`:
     * boundary cell count ≈ perimeter / cellSize, so solve for the level
     * whose cell size ≈ perimeter / targetCells. Clamped to [2, MaxLevel]. */

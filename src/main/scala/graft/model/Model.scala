@@ -51,21 +51,6 @@ object Model {
     StructField("spans", ArrayType(spanType, containsNull = false), nullable = false)
   ))
 
-  /** Well-known dimension registry (name -> Spark type), mirroring the
-    * reference's Dimension.hpp:556-666 defaults with unsigned widening. */
-  val dimTypes: Map[String, DataType] = Map(
-    "x" -> DoubleType, "y" -> DoubleType, "z" -> DoubleType,
-    "intensity" -> IntegerType, // u16 -> int
-    "return_number" -> ShortType, "number_of_returns" -> ShortType, // u8 -> short
-    "classification" -> ShortType, // u8 -> short
-    "scan_angle_rank" -> FloatType,
-    "user_data" -> ShortType,
-    "point_source_id" -> IntegerType, // u16 -> int
-    "gps_time" -> DoubleType,
-    "offset_time" -> DoubleType,
-    "red" -> IntegerType, "green" -> IntegerType, "blue" -> IntegerType
-  )
-
   /** Type-widening lattice, per PointLayout::resolveType
     * (reference src/PointLayout.cpp:257): same base type -> wider wins;
     * signed+unsigned -> next wider signed; anything+float -> double big
@@ -197,157 +182,6 @@ object Model {
           s.getField("text").as("text"),
           s.getField("media_ref").as("media_ref"),
           s.getField("offset").as("offset"))).as("spans"))
-  }
-
-  // -------------------------------------------------------------------
-  // Columnar (dim-major) payload encoding — the second physical layout
-  // of the interleaved-payload axis. The reference's BPF format stores
-  // the same points row-major, dim-major, or byte-major in one container
-  // (io/bpf/BpfReader.cpp:248-253); our doc table mirrors that: a
-  // "points" span is row-major (one span per point), a "points_columnar"
-  // span carries a whole batch dim-major (one array per dimension,
-  // ';'-separated dims of ','-separated ints). Both decode to the same
-  // point frame.
-  // -------------------------------------------------------------------
-
-  /** Re-encode each document's point spans into ONE dim-major span
-    * (kind="points_columnar", offset = first point's offset). */
-  def toColumnar(docs: DataFrame): DataFrame = {
-    val pts = explodePoints(docs)
-    val colSpans = pts
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("span_idx"),
-        (col("x") / Scale).cast(LongType).as("xi"),
-        (col("y") / Scale).cast(LongType).as("yi"),
-        (col("z") / Scale).cast(LongType).as("zi"),
-        col("intensity"), col("gps_time").cast(LongType).as("pid")))).as("ps"))
-      .select(col("doc_id"), lit("points_columnar").as("kind"),
-        concat_ws(";",
-          concat_ws(",", transform(col("ps"), p => p.getField("xi").cast(StringType))),
-          concat_ws(",", transform(col("ps"), p => p.getField("yi").cast(StringType))),
-          concat_ws(",", transform(col("ps"), p => p.getField("zi").cast(StringType))),
-          concat_ws(",", transform(col("ps"), p => p.getField("intensity").cast(StringType))),
-          concat_ws(",", transform(col("ps"), p => p.getField("pid").cast(StringType))),
-          concat_ws(",", transform(col("ps"), p => p.getField("span_idx").cast(StringType)))
-        ).as("text"),
-        lit("").as("media_ref"),
-        element_at(col("ps"), 1).getField("span_idx").as("offset"))
-    val nonPoint = docs
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .filter(col("s.kind") =!= "point")
-      .select(col("doc_id"), col("s.kind").as("kind"), col("s.text").as("text"),
-        col("s.media_ref").as("media_ref"), col("s.offset").as("offset"))
-    nonPoint.unionByName(colSpans)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(
-        col("offset"), col("kind"), col("text"), col("media_ref")))).as("ordered"))
-      .select(col("doc_id"),
-        transform(col("ordered"), s => struct(
-          s.getField("kind").as("kind"), s.getField("text").as("text"),
-          s.getField("media_ref").as("media_ref"), s.getField("offset").as("offset")))
-          .as("spans"))
-  }
-
-  /** Decode dim-major point spans to the SAME flat point frame as
-    * [[explodePoints]] — layout-transparent consumers. */
-  def explodePointsColumnar(docs: DataFrame): DataFrame = {
-    val sp = docs
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .filter(col("s.kind") === "points_columnar")
-    val dims = split(col("s.text"), ";")
-    val sized = sp.select(col("doc_id"),
-      split(dims.getItem(0), ",").as("xs"), split(dims.getItem(1), ",").as("ys"),
-      split(dims.getItem(2), ",").as("zs"), split(dims.getItem(3), ",").as("is"),
-      split(dims.getItem(4), ",").as("ps"), split(dims.getItem(5), ",").as("ss"))
-    sized
-      .select(col("doc_id"), posexplode(col("xs")).as(Seq("i", "xi")),
-        col("ys"), col("zs"), col("is"), col("ps"), col("ss"))
-      .select(col("doc_id"),
-        element_at(col("ss"), col("i") + 1).cast(IntegerType).as("span_idx"),
-        (col("xi").cast(LongType) * Scale).as("x"),
-        (element_at(col("ys"), col("i") + 1).cast(LongType) * Scale).as("y"),
-        (element_at(col("zs"), col("i") + 1).cast(LongType) * Scale).as("z"),
-        element_at(col("is"), col("i") + 1).cast(IntegerType).as("intensity"),
-        element_at(col("ps"), col("i") + 1).cast(DoubleType).as("gps_time"))
-  }
-
-  /** Third physical layout: BYTE-major (reference BpfReader.cpp:248-253
-    * DIM_POINT_MAJOR / POINT_MAJOR / BYTE_MAJOR — this is the third).
-    * Each dimension's values are transposed into base-256 byte planes:
-    * plane b holds byte b (little-endian) of every value, so a span
-    * carries dims x planes comma-lists (';'-separated). The payload ints
-    * all fit u32, so 4 planes per dimension. Decodes to the same point
-    * frame as the other two layouts (codec-equality spec). */
-  private val BytePlanes = 4
-  private val ByteMajorDims = Seq("xi", "yi", "zi", "intensity", "pid", "span_idx")
-
-  def toByteMajor(docs: DataFrame): DataFrame = {
-    val pts = explodePoints(docs)
-    val gathered = pts
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("span_idx"),
-        (col("x") / Scale).cast(LongType).as("xi"),
-        (col("y") / Scale).cast(LongType).as("yi"),
-        (col("z") / Scale).cast(LongType).as("zi"),
-        col("intensity").cast(LongType).as("intensity"),
-        col("gps_time").cast(LongType).as("pid"),
-        col("span_idx").cast(LongType).as("span_idx_v")))).as("ps"))
-    // dims x planes lists: value byte b = (v >> 8b) & 255
-    val planeLists = ByteMajorDims.flatMap { d =>
-      val field = if (d == "span_idx") "span_idx_v" else d
-      (0 until BytePlanes).map { b =>
-        concat_ws(",", transform(col("ps"), p =>
-          shiftright(p.getField(field), 8 * b).bitwiseAND(lit(255L)).cast(StringType)))
-      }
-    }
-    val byteSpans = gathered.select(col("doc_id"), lit("points_bytemajor").as("kind"),
-      concat_ws(";", planeLists: _*).as("text"), lit("").as("media_ref"),
-      element_at(col("ps"), 1).getField("span_idx").as("offset"))
-    val nonPoint = docs
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .filter(col("s.kind") =!= "point")
-      .select(col("doc_id"), col("s.kind").as("kind"), col("s.text").as("text"),
-        col("s.media_ref").as("media_ref"), col("s.offset").as("offset"))
-    nonPoint.unionByName(byteSpans)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(
-        col("offset"), col("kind"), col("text"), col("media_ref")))).as("ordered"))
-      .select(col("doc_id"),
-        transform(col("ordered"), s => struct(
-          s.getField("kind").as("kind"), s.getField("text").as("text"),
-          s.getField("media_ref").as("media_ref"), s.getField("offset").as("offset")))
-          .as("spans"))
-  }
-
-  /** Decode byte-major point spans to the SAME flat point frame. */
-  def explodePointsByteMajor(docs: DataFrame): DataFrame = {
-    val sp = docs
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .filter(col("s.kind") === "points_bytemajor")
-    val lists = split(col("s.text"), ";")
-    // reassemble each dim: v = sum_b plane_b << 8b
-    def dimCol(dimIdx: Int): Column = {
-      val planes = (0 until BytePlanes).map { b =>
-        split(lists.getItem(dimIdx * BytePlanes + b), ",")
-      }
-      // materialized per-row below via element_at over the exploded index
-      struct(planes.zipWithIndex.map { case (p, b) => p.as(s"b$b") }: _*)
-    }
-    val withDims = sp.select(col("doc_id") +:
-      ByteMajorDims.zipWithIndex.map { case (d, i) => dimCol(i).as(s"__$d") }: _*)
-    def valueAt(d: String, i: Column): Column =
-      (0 until BytePlanes).map { b =>
-        shiftleft(element_at(col(s"__$d").getField(s"b$b"), i).cast(LongType), 8 * b)
-      }.reduce(_ + _)
-    withDims
-      .withColumn("__i", explode(transform(col("__xi").getField("b0"), (_, idx) => idx)))
-      .select(col("doc_id"),
-        valueAt("span_idx", col("__i") + 1).cast(IntegerType).as("span_idx"),
-        (valueAt("xi", col("__i") + 1) * Scale).as("x"),
-        (valueAt("yi", col("__i") + 1) * Scale).as("y"),
-        (valueAt("zi", col("__i") + 1) * Scale).as("z"),
-        valueAt("intensity", col("__i") + 1).cast(IntegerType).as("intensity"),
-        valueAt("pid", col("__i") + 1).cast(DoubleType).as("gps_time"))
   }
 
   /** Canonical string rendering of a document's span sequence — the

@@ -142,13 +142,6 @@ object DocSynth {
     docs.join(bounds, Seq("doc_id"), "left")
   }
 
-  /** Drop memoized tables (required between SparkSessions — a cached DF
-    * is bound to its (stopped) context). */
-  def clearCache(): Unit = {
-    memo.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    memo.clear()
-  }
-
   /** The flat point frame for a testdata dir, via the honest path
     * (doc table -> explode -> decode). */
   def points(spark: SparkSession, sfDir: String): DataFrame =
@@ -173,10 +166,6 @@ object DocSynth {
   * Any edit to DocSynth formulas must be mirrored here (and vice versa) —
   * the correctness gate compares the two row-for-row. */
 object Oracle {
-  /** Points CTE: identical values to DocSynth.points / pointsDirect.
-    * NOTE DuckDB CAST(double AS INT) rounds (Spark truncates) — all
-    * formulas below stay in integer arithmetic until the final exact
-    * *0.5 scaling, so no cast-direction trap. */
   /** Shared ordinal CTE: the unique per-doc span ordinal (see
     * DocSynth.quantized — row_number over the full span-content key). */
   private val seqCte: String =
@@ -224,4 +213,22 @@ object Oracle {
       |         'blob://' || CAST(l_partkey AS VARCHAR), seq * 3 + 2
       |  FROM li WHERE seq % 3 = 1
       |)""".stripMargin
+
+  /** Morton key of (x, y) in CellSpace.default, as pure SQL bit math —
+    * the oracle twin of graft.index.Morton.interleave. The default space
+    * scale is 2^20 exactly (2^30 cells over [0,1024)), so ix = x * 2^20
+    * is an exact integer for the 0.5-grid synthetic points. */
+  private[graft] def mortonSql(xc: String, yc: String): String = {
+    def spread(v: String): String = {
+      // progressive magic-mask spreading, mirroring Morton.spread
+      val s1 = s"((($v) | (($v) << 16)) & 281470681808895)" // 0x0000ffff0000ffff
+      val s2 = s"((($s1) | (($s1) << 8)) & 71777214294589695)" // 0x00ff00ff00ff00ff
+      val s3 = s"((($s2) | (($s2) << 4)) & 1085102592571150095)" // 0x0f0f0f0f0f0f0f0f
+      val s4 = s"((($s3) | (($s3) << 2)) & 3689348814741910323)" // 0x3333333333333333
+      s"((($s4) | (($s4) << 1)) & 6148914691236517205)" // 0x5555555555555555
+    }
+    val ix = s"CAST(($xc) * 1048576 AS BIGINT)"
+    val iy = s"CAST(($yc) * 1048576 AS BIGINT)"
+    s"(${spread(ix)} | (${spread(iy)} << 1))"
+  }
 }

@@ -249,10 +249,14 @@ object Pcd {
             (i, f, if (f.count == 1) f.name else s"${f.name}_$c")
         }
         val rows = (0 until n).map { i =>
+          if (!lines.hasNext) throw new IllegalArgumentException(
+            s"pcd: POINTS $n but the ascii body has $i rows")
           val toks = lines.next().split("\\s+")
           val vals = keep.map { case (j, f, nm) =>
-            // PCL writes unsigned/rgba as raw integers; tolerate float text
-            convert(f, nm, toks(j).toDouble)
+            // PCL writes unsigned/rgba as raw integers; tolerate float
+            // text. F4 parses into float storage, as the binary decode.
+            val v = toks(j).toDouble
+            convert(f, nm, if (f.tpe == "F" && f.size == 4) v.toFloat.toDouble else v)
           }
           Row.fromSeq(docId +: i +: vals)
         }
@@ -343,10 +347,6 @@ object Pcd {
     case other => throw new IllegalArgumentException(s"pcd: unwritable type $other")
   }
 
-  /** Write the DataFrame's numeric columns as one PCD (driver collect —
-    * fixture-scale by intent; shard upstream for volume). `shiftOrigin`
-    * reproduces the reference writer's PDALtoPCD bounds-min subtraction
-    * (lossy, nothing re-adds it on read). */
   /** Build one complete PCD v0.7 image for `recs` (one boxed value per
     * column each, in `cols` order). Shared by the driver writer and the
     * sharded executor writer. With `shiftOrigin`, x/y/z are rebased to

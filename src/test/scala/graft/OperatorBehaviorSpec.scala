@@ -536,28 +536,6 @@ class OperatorBehaviorSpec extends AnyFunSuite {
     assert(s3.getLong(2) === 250L) // ramp: quarter of the box survives both
   }
 
-  test("columnar (dim-major) payload encoding decodes to the same point frame") {
-    val docs = graft.sources.DocSynth.cachedDocs(spark, "/root/testdata/sf0.001")
-    val rowMajor = Model.explodePoints(docs)
-    val columnar = Model.toColumnar(docs)
-    val decoded = Model.explodePointsColumnar(columnar)
-    assert(decoded.exceptAll(rowMajor).isEmpty && rowMajor.exceptAll(decoded).isEmpty)
-    // non-point spans survive the re-layout untouched
-    val nonPoint = (d: org.apache.spark.sql.DataFrame) => Model.spanSignature(d)
-      .select(col("doc_id"), concat_ws("|",
-        filter(split(col("sig"), "\\|"),
-          s => !s.startsWith("point"))).as("np"))
-    assert(nonPoint(columnar).exceptAll(nonPoint(docs)).isEmpty)
-  }
-
-  test("byte-major payload encoding (BPF third layout) decodes to the same point frame") {
-    val docs = graft.sources.DocSynth.cachedDocs(spark, "/root/testdata/sf0.001")
-    val rowMajor = Model.explodePoints(docs)
-    val byteMajor = Model.toByteMajor(docs)
-    val decoded = Model.explodePointsByteMajor(byteMajor)
-    assert(decoded.exceptAll(rowMajor).isEmpty && rowMajor.exceptAll(decoded).isEmpty)
-  }
-
   test("SQL extension functions register and evaluate from SQL text") {
     graft.functions.GraftExtensions.registerTemp(spark)
     val r = spark.sql(

@@ -62,6 +62,12 @@ class OracleParitySpec extends AnyFunSuite {
     out.sortBy(_.mkString(""))
   }
 
+  test("roster: a duplicate query name fails at construction") {
+    val q = SparkEntry.roster.last
+    val e = intercept[IllegalArgumentException](QuerySpec.unique(SparkEntry.roster :+ q))
+    assert(e.getMessage.contains(q.name))
+  }
+
   SparkEntry.oracleSql.keys.toSeq.sorted.foreach { name =>
     test(s"oracle parity: $name") {
       val got = sparkRows(name)

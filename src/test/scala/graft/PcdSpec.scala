@@ -95,6 +95,28 @@ class PcdSpec extends AnyFunSuite {
     }
   }
 
+  test("ascii decodes F4 x/y/z as float32 like binary; a short ascii body names both row counts") {
+    val src = graft.sources.Faux.ramp(spark,
+      graft.sources.Faux.Box3(0, 0, 0, 10, 100, 1000), 500)
+    val dir = tmpDir
+    def image(mode: String): Array[Byte] = {
+      val p = s"$dir/f4-$mode.pcd"
+      Pcd.write(p, src, mode)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+    }
+    val ascii = image("ascii")
+    val (_, fromAscii) = Pcd.decode(ascii, "d")
+    val (_, fromBinary) = Pcd.decode(image("binary"), "d")
+    assert(fromAscii.size === 500)
+    assert(fromAscii === fromBinary)
+    // drop the last data row: 499 rows under POINTS 500
+    val cut = ascii.lastIndexOf('\n'.toByte, ascii.length - 2) + 1
+    val e = intercept[IllegalArgumentException](
+      Pcd.decode(java.util.Arrays.copyOf(ascii, cut), "d"))
+    assert(e.getMessage.contains("POINTS 500") && e.getMessage.contains("499 rows"),
+      e.getMessage)
+  }
+
   test("shift_origin mirrors the reference's lossy bounds-min subtraction") {
     import org.apache.spark.sql.functions._
     val src = graft.sources.Faux.ramp(spark,
